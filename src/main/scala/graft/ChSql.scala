@@ -46,8 +46,10 @@ import scala.util.matching.Regex
   *     `[LEFT] ANY JOIN … ON a.k = b.k` → [[graft.ops.Joins]]
   *     (union+window ASOF, right-dedup ANY) via a temp view, with
   *     `alias.col` references re-targeted (see rewriteSpecialJoins).
-  *   - `ALTER TABLE t DELETE/UPDATE … WHERE …` → copy-on-write
-  *     snapshot ([[graft.ops.Mutations]]), temp view repointed.
+  *   - `INSERT INTO t …` → one new immutable parquet part, the temp
+  *     view repointed to the table's part list; `ALTER TABLE t
+  *     DELETE/UPDATE … WHERE …` → all parts rewritten into one
+  *     ([[graft.ops.Mutations]]).
   *
   * Scope (documented, loud failures otherwise): the CH clauses are
   * recognized at the top level of a single SELECT; ORDER BY items
@@ -883,15 +885,23 @@ object ChSql {
     }
     if (systemPartsRe.findFirstIn(q).isDefined) {
       import spark.implicits._
-      // CH system.parts: one row per storage part. The Spark analog
-      // is one row per backing file, with on-disk bytes from the FS
-      // (row counts would need a footer read per file — omitted).
+      // CH system.parts: one row per storage part holding data, with
+      // on-disk bytes from the FS (row counts would need a footer read
+      // per file — omitted). A front-door table's parts are its part
+      // directories; any other view reports each backing file.
+      def bytes(f: java.io.File): Long =
+        if (!f.isDirectory) f.length()
+        else f.listFiles().filterNot(c => c.getName.startsWith(".") ||
+          c.getName.startsWith("_")).map(bytes).sum
       spark.catalog.listTables().collect().toSeq.flatMap { t =>
-        scala.util.Try(spark.table(t.name).inputFiles.toSeq)
-          .getOrElse(Nil).map { f =>
-            val p = new java.io.File(new java.net.URI(f).getPath)
-            ("default", t.name, p.getName, p.length(), 1)
-          }
+        scala.util.Try {
+          val df = spark.table(t.name)
+          partsOf(df).map(_._1).getOrElse(
+            df.inputFiles.toSeq.map(f => new java.net.URI(f).getPath))
+        }.getOrElse(Nil).map { path =>
+          val p = new java.io.File(path)
+          ("default", t.name, p.getName, bytes(p), 1)
+        }.filter(_._4 > 0)
       }.toDF("database", "table", "name", "bytes_on_disk", "active")
         .createOrReplaceTempView("graft_system_parts")
       q = maskedReplaceAll(q, systemPartsRe)(_ => "graft_system_parts")
@@ -3110,23 +3120,91 @@ object ChSql {
     """(?is)^\s*ALTER\s+TABLE\s+([A-Za-z_]\w*)\s+(DELETE|UPDATE)\b(.*)$""".r
   private val mutationSeq = new java.util.concurrent.atomic.AtomicLong()
 
+  // ---- MergeTree parts ----------------------------------------------
+  // A table written through the front door is a list of immutable
+  // parquet parts under partsRoot, and its temp view reads all of them
+  // (Mutations.readParts). INSERT adds a part; mutations, column DDL
+  // and OPTIMIZE rewrite the parts into one (they are the merge).
+
+  /** Parts a table may hold; an INSERT that would exceed it merges. */
+  private[graft] val MaxParts = 4
+
+  private val partsRoot =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "graft_mutations").toString
+
+  // tells apart the part directories of JVMs sharing partsRoot
+  private val jvmTag = java.util.UUID.randomUUID().toString.take(8)
+
+  /** A fresh part directory of `table`; `tag` names the statement. */
+  private def newPartDir(table: String, tag: String): String =
+    s"$partsRoot/${table}_${tag}_${jvmTag}_${mutationSeq.incrementAndGet()}"
+
+  /** (part directories, partition columns) of a front-door table. */
+  private def partsOf(df: DataFrame): Option[(Seq[String], Seq[String])] =
+    graft.ops.Mutations.partsOf(df, partsRoot)
+
+  /** Partition columns of `df` that `out` still has. */
+  private def partCols(df: DataFrame, out: DataFrame): Seq[String] =
+    partsOf(df).map(_._2).getOrElse(Nil).filter(out.columns.contains)
+
+  /** Writes `df` as the single new part of `table` (a merge). */
+  private def writePart(df: DataFrame, table: String, tag: String,
+      partitionBy: Seq[String] = Nil): DataFrame =
+    graft.ops.Mutations.writePart(df, newPartDir(table, tag), partitionBy)
+
+  /** Points `table`'s view at `out`, dropping its skip index. */
+  private def repoint(table: String, out: DataFrame): DataFrame = {
+    invalidateIndex(table)
+    out.createOrReplaceTempView(table)
+    out
+  }
+
+  /** Appends `rows` to `table` as one new part and repoints the view;
+    * returns the block as written. A table whose view is not a part
+    * list yet (a fixture view, a persisted frame) is first written
+    * once as part 0, and parts without files (no rows) drop out of the
+    * list. Rows cast to the table's column types; when the table's
+    * types would have to widen instead, or the table would hold more
+    * than [[MaxParts]] parts, the parts and the block merge into one.
+    */
+  private def appendPart(spark: SparkSession, table: String,
+      rows: DataFrame): DataFrame = {
+    val view = spark.table(table)
+    val cur = if (partsOf(view).isDefined) view else writePart(view, table, "p0")
+    val (parts, cols) = partsOf(cur).get
+    val ordered = rows.select(cur.columns.map(col).toIndexedSeq: _*)
+    val fits = cur.unionByName(ordered).schema == cur.schema
+    val blockDir = newPartDir(table, "blk")
+    val block = graft.ops.Mutations.writePart(
+      if (!fits) ordered
+      else ordered.select(cur.schema.fields.map(f =>
+        col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*),
+      blockDir, cols)
+    val files = (cur.inputFiles ++ block.inputFiles).map(f => new java.net.URI(f).getPath)
+    val live = (parts :+ blockDir).filter(d => files.exists(_.startsWith(d + "/")))
+    repoint(table,
+      if (!fits || live.size > MaxParts) writePart(cur.unionByName(block), table, "merge", cols)
+      else if (live.isEmpty) cur
+      else graft.ops.Mutations.readParts(spark, live, cur.schema, cols.nonEmpty))
+    block
+  }
+
   /** `ALTER TABLE t DELETE WHERE cond` / `ALTER TABLE t UPDATE c = e,
-    * … WHERE cond` → [[graft.ops.Relational]]-style copy-on-write
-    * snapshot via [[graft.ops.Mutations]]; the temp view repoints to
-    * the snapshot (upstream's part-rewrite model) and the mutated
-    * frame is returned.
+    * … WHERE cond` → [[graft.ops.Mutations]] rewrites all the table's
+    * parts into one (upstream's part-rewrite model), the temp view
+    * repoints to it and the mutated frame is returned.
     */
   private def runAlter(spark: SparkSession, table: String, verb: String,
       bodyRaw: String): DataFrame = {
     val body = bodyRaw.trim
     val df = spark.table(table)
-    val dest = s"${System.getProperty("java.io.tmpdir")}/graft_mutations/" +
-      s"${table}_${mutationSeq.incrementAndGet()}"
+    val dest = newPartDir(table, "mut")
+    val cols = partCols(df, df)
     val out = verb.toUpperCase(java.util.Locale.ROOT) match {
       case "DELETE" =>
         require(body.toUpperCase(java.util.Locale.ROOT).startsWith("WHERE"),
           s"ALTER TABLE … DELETE needs WHERE, got '$body'")
-        graft.ops.Mutations.deleteWhere(df, expr(body.substring(5)), dest)
+        graft.ops.Mutations.deleteWhere(df, expr(body.substring(5)), dest, cols)
       case "UPDATE" =>
         val w = firstTopLevel(body, whereRe).getOrElse(
           throw new IllegalArgumentException(
@@ -3137,11 +3215,9 @@ object ChSql {
           case other => throw new IllegalArgumentException(
             s"bad UPDATE assignment '$other' (want col = expr)")
         }.toMap
-        graft.ops.Mutations.updateWhere(df, expr(body.substring(w.end)), set, dest)
+        graft.ops.Mutations.updateWhere(df, expr(body.substring(w.end)), set, dest, cols)
     }
-    invalidateIndex(table)
-    out.createOrReplaceTempView(table)
-    out
+    repoint(table, out)
   }
 
   // ---- CH DDL: ALTER TABLE t ADD/DROP/MODIFY/RENAME COLUMN ---------
@@ -3203,9 +3279,9 @@ object ChSql {
     }
   }
 
-  /** Column DDL as copy-on-write snapshots (the same part-rewrite
+  /** Column DDL rewrites the parts into one (the same part-rewrite
     * model as DELETE/UPDATE; at warehouse scale ADD/RENAME are
-    * metadata-only — the fixture-scale snapshot keeps the semantics
+    * metadata-only — the fixture-scale rewrite keeps the semantics
     * testable). ADD without DEFAULT fills with the TYPE DEFAULT
     * (0 / '' / false), CH's non-Nullable contract.
     */
@@ -3261,13 +3337,7 @@ object ChSql {
             s"RENAME COLUMN wants 'a TO b', got '$body'")
         }
     }
-    val dest = s"${System.getProperty("java.io.tmpdir")}/graft_mutations/" +
-      s"${table}_ddl_${mutationSeq.incrementAndGet()}"
-    out.write.mode("overwrite").parquet(dest)
-    val snap = spark.read.parquet(dest)
-    invalidateIndex(table)
-    snap.createOrReplaceTempView(table)
-    snap
+    repoint(table, writePart(out, table, "ddl", partCols(df, out)))
   }
 
   // ---- CH CTAS: CREATE TABLE t ENGINE = … AS SELECT ----------------
@@ -3320,7 +3390,7 @@ object ChSql {
 
   /** `CREATE TABLE t ENGINE = <MergeTree family>[(args)] [PARTITION
     * BY col] [ORDER BY (k…)] [SAMPLE BY c] AS SELECT …`: the SELECT
-    * snapshots to parquet SORTED WITHIN PARTITIONS by the ORDER BY
+    * writes one parquet part SORTED WITHIN PARTITIONS by the ORDER BY
     * keys (the MergeTree part-ordering analog — row-group min/max
     * stats become the sparse index), a plain-column PARTITION BY
     * writes hive-partitioned directories (real partition pruning;
@@ -3360,7 +3430,7 @@ object ChSql {
     var df = run(spark, select)
     orderKeys.foreach(k => require(df.columns.contains(k),
       s"ORDER BY key '$k' is not a column of the SELECT"))
-    // r20, guide §6 output sizing: REBALANCE before the snapshot write
+    // r20, guide §6 output sizing: REBALANCE before the part write
     // so AQE sizes the output files from the DATA (advisory target)
     // instead of inheriting the source's task count — a fixture-scale
     // CTAS wrote 32 near-empty part files that every later statement
@@ -3386,16 +3456,7 @@ object ChSql {
         d => Relational.applyRowTtl(d, tsCol, keep)
       }
 
-    val dest = s"${System.getProperty("java.io.tmpdir")}/graft_mutations/" +
-      s"${name}_ctas_${mutationSeq.incrementAndGet()}"
-    val writer = df.write.mode("overwrite")
-    partCol match {
-      case Some(p) => writer.partitionBy(p).parquet(dest)
-      case None => writer.parquet(dest)
-    }
-    val snap = spark.read.parquet(dest)
-    invalidateIndex(name)
-    snap.createOrReplaceTempView(name)
+    val snap = repoint(name, writePart(df, name, "ctas", partCol.toSeq))
     ctasTables.add(name)
     ctasDdl(name) = m.matched.trim
 
@@ -3498,12 +3559,11 @@ object ChSql {
     val parts = Option(m.group(5)).map(_.toInt).getOrElse(8)
     val df = spark.table(table)
     require(df.columns.contains(col0), s"no column '$col0' in $table")
-    val dest = s"${System.getProperty("java.io.tmpdir")}/graft_mutations/" +
-      s"${table}_idx_${mutationSeq.incrementAndGet()}"
+    val dest = newPartDir(table, "idx")
     if (typ == "bloom_filter") graft.ops.SkipIndex.buildBloom(df, dest, col0, parts)
     else graft.ops.SkipIndex.build(df, dest, col0, parts)
-    val snap = spark.read.parquet(s"$dest/data")
-    snap.createOrReplaceTempView(table)
+    graft.ops.Mutations.readParts(spark, Seq(s"$dest/data"), df.schema, partitioned = false)
+      .createOrReplaceTempView(table)
     skipIndexes.put(table.toLowerCase(java.util.Locale.ROOT), (dest, col0, typ))
     import spark.implicits._
     Seq(s"$table.${m.group(2)}").toDF("added_index")
@@ -3583,10 +3643,10 @@ object ChSql {
     """(?is)^\s*INSERT\s+INTO\s+([A-Za-z_]\w*)\s*(?:\(([^)]*)\)\s*)?VALUES\s+(.*)$""".r
 
   /** `INSERT INTO t SELECT …` / `INSERT INTO t VALUES (…), (…)` —
-    * append as a copy-on-write snapshot (immutable parts + repoint,
-    * like every mutation here). The SELECT body goes back through
-    * [[run]], so CH clauses work inside an INSERT; VALUES rows are
-    * positional and adopt the target's column names.
+    * writes the inserted block once, as a new part of `t`
+    * ([[appendPart]]). The SELECT body goes back through [[run]], so
+    * CH clauses work inside an INSERT; VALUES rows are positional and
+    * adopt the target's column names.
     */
   private def colList(g: String): Option[Seq[String]] =
     Option(g).map(splitTopLevel(_).map(_.trim))
@@ -3616,22 +3676,12 @@ object ChSql {
         val e = defaults.get(f.name).map(expr).getOrElse(lit(null))
         d.withColumn(f.name, e.cast(f.dataType))
       }
-    // Materialize the inserted block BEFORE repointing the view: the
-    // SELECT body may read the target table itself, and the MV trigger
-    // below must see the block as-of insert time, not the new state.
-    val blockDest = s"${System.getProperty("java.io.tmpdir")}/graft_mutations/" +
-      s"${table}_blk_${mutationSeq.incrementAndGet()}"
-    add.select(cur.columns.map(col).toIndexedSeq: _*)
-      .write.mode("overwrite").parquet(blockDest)
-    val block = spark.read.parquet(blockDest)
-    val dest = s"${System.getProperty("java.io.tmpdir")}/graft_mutations/" +
-      s"${table}_ins_${mutationSeq.incrementAndGet()}"
-    cur.unionByName(block).write.mode("overwrite").parquet(dest)
-    val out = spark.read.parquet(dest)
-    invalidateIndex(table)
-    out.createOrReplaceTempView(table)
+    // The block is written BEFORE the view repoints: the SELECT body
+    // may read the target table itself, and the MV trigger below must
+    // see the block as of insert time, not the new state.
+    val block = appendPart(spark, table, add)
     fireMaterializedViews(spark, table, block)
-    out
+    spark.table(table)
   }
 
   // ---- materialized views ------------------------------------------
@@ -3693,18 +3743,8 @@ object ChSql {
     id
   }
 
-  private def snapshot(spark: SparkSession, df: DataFrame,
-      name: String): DataFrame = {
-    val dest = s"${System.getProperty("java.io.tmpdir")}/graft_mutations/" +
-      s"${name}_${mutationSeq.incrementAndGet()}"
-    df.write.mode("overwrite").parquet(dest)
-    val out = spark.read.parquet(dest)
-    out.createOrReplaceTempView(name)
-    out
-  }
-
   /** Run each MV registered on `table` over the freshly inserted
-    * `block` and append the result to the MV's snapshot.
+    * `block` and append the result to the MV's parts.
     */
   private def fireMaterializedViews(spark: SparkSession, table: String,
       block: DataFrame): Unit =
@@ -3713,8 +3753,7 @@ object ChSql {
       block.createOrReplaceTempView(blockView)
       val rebound = qtext.replaceAll("(?i)\\bFROM\\s+" + table + "\\b",
         "FROM " + blockView)
-      val delta = run(spark, rebound)
-      snapshot(spark, spark.table(mv).unionByName(delta), mv)
+      appendPart(spark, mv, run(spark, rebound))
       spark.catalog.dropTempView(blockView)
     }
 
@@ -4018,7 +4057,7 @@ object ChSql {
         .toDF("statement")
     }
     // CH lightweight DELETE (`DELETE FROM t WHERE …`) — same
-    // copy-on-write snapshot as ALTER TABLE DELETE (upstream's
+    // part rewrite as ALTER TABLE DELETE (upstream's
     // lightweight variant only differs in WHEN rows disappear)
     deleteFromRe.findFirstMatchIn(query).foreach { m =>
       return runAlter(spark, m.group(1), "DELETE", m.group(2))
@@ -4051,7 +4090,7 @@ object ChSql {
       val initial =
         if (m.group(2) != null) run(spark, qtext)
         else run(spark, qtext).limit(0)
-      snapshot(spark, initial, mv)
+      repoint(mv, writePart(initial, mv, "mv"))
       mvRegistry(mv) = (base, qtext)
       import spark.implicits._
       return Seq(mv).toDF("created_mv")
@@ -4091,7 +4130,7 @@ object ChSql {
       return runAlter(spark, m.group(1), m.group(2), m.group(3))
     }
     truncateRe.findFirstMatchIn(query).foreach { m =>
-      // TRUNCATE TABLE t → empty snapshot, view repointed
+      // TRUNCATE TABLE t → one empty part, view repointed
       return runAlter(spark, m.group(1), "DELETE", "WHERE true")
     }
     // CHECK TABLE t — CH's integrity probe; the Spark analog is a
@@ -4116,7 +4155,7 @@ object ChSql {
         colList(m.group(2)))
     }
     optimizeRe.findFirstMatchIn(query).foreach { m =>
-      // OPTIMIZE TABLE t = merge parts → one compacted snapshot.
+      // OPTIMIZE TABLE t = merge the parts into one.
       // FINAL additionally collapses engine-specific duplicates; the
       // collapse comes from the table's registered engine metadata
       // (CTAS ENGINE clause / registerFinal). Unregistered tables
@@ -4133,14 +4172,9 @@ object ChSql {
       // DEDUPLICATE drops fully identical rows (CH's whole-row form)
       val dedup: DataFrame => DataFrame =
         if (m.group(3) != null) _.distinct() else identity
-      val dest = s"${System.getProperty("java.io.tmpdir")}/graft_mutations/" +
-        s"${table}_opt_${mutationSeq.incrementAndGet()}"
-      dedup(collapse(spark.table(table))).coalesce(1)
-        .write.mode("overwrite").parquet(dest)
-      val out = spark.read.parquet(dest)
-      invalidateIndex(table)
-      out.createOrReplaceTempView(table)
-      return out
+      val cur = spark.table(table)
+      val out = dedup(collapse(cur)).coalesce(1)
+      return repoint(table, writePart(out, table, "opt", partCols(cur, out)))
     }
     // CH `SELECT … INTO OUTFILE 'path' [FORMAT f]` — the inner query
     // re-routes (so CH clauses work), then writes as a Spark

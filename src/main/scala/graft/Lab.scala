@@ -12,6 +12,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * Usage: runMain graft.Lab <sfDir> <rounds> <query...>
   */
 object Lab {
+  /** `k=v;k=v` → (k, v) pairs; an entry without `=` is refused by name. */
+  private[graft] def confPairs(spec: String): Seq[(String, String)] =
+    spec.split(';').toSeq.filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => (k, v)
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_LAB_CONF entry '$kv' is not key=value")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val rounds = args(1).toInt
@@ -27,12 +37,9 @@ object Lab {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
     // conf A/B hook: SPARK_GRAFT_LAB_CONF="k=v;k=v" layered on top
-    sys.env.get("SPARK_GRAFT_LAB_CONF").foreach {
-      _.split(';').filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    }
+    sys.env.get("SPARK_GRAFT_LAB_CONF").foreach(confPairs(_).foreach {
+      case (k, v) => builder.config(k, v)
+    })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -93,12 +93,17 @@ object SemDedup {
     */
   def bandKeys(vecs: DataFrame, idCol: String,
                p: SemDedupParams = SemDedupParams()): DataFrame =
-    vecs.select(col(idCol), explode(expr(
-      s"""transform(sequence(0, ${p.bands - 1}), b -> concat(CAST(b AS STRING), ':',
-         |  CAST(aggregate(sequence(0, ${p.bitsPerBand - 1}), 0L, (acc, q) ->
-         |    acc + CASE WHEN element_at(dots, b * ${p.bitsPerBand} + q + 1) > 0
-         |               THEN shiftleft(1L, q) ELSE 0L END) AS STRING)))"""
-        .stripMargin)).as("bk"))
+    vecs.select(col(idCol), explodedBandKeys(p))
+
+  // The key array is built inside the Generate: computed in a Project
+  // instead, Catalyst inlines the whole embedding chain into the
+  // not-null filter it infers for the band join.
+  private def explodedBandKeys(p: SemDedupParams) = explode(expr(
+    s"""transform(sequence(0, ${p.bands - 1}), b -> concat(CAST(b AS STRING), ':',
+       |  CAST(aggregate(sequence(0, ${p.bitsPerBand - 1}), 0L, (acc, q) ->
+       |    acc + CASE WHEN element_at(dots, b * ${p.bitsPerBand} + q + 1) > 0
+       |               THEN shiftleft(1L, q) ELSE 0L END) AS STRING)))"""
+      .stripMargin)).as("bk")
 
   /** Confirmed near-dup pairs (a_id, b_id, sim) from a [[featureVecs]]
     * frame: banded candidates under the hot-bucket policy, confirmed
@@ -107,19 +112,22 @@ object SemDedup {
     * list_cosine_similarity returns −1.0 where Spark yields NaN, so
     * both engines must exclude such pairs structurally.
     *
+    * The vectors ride the band self-join as payload, so each
+    * embedding is derived once, with no join back on the ids; a pair
+    * sharing several bands is confirmed once per band and its
+    * identical rows collapse after the threshold.
+    *
     * Lazy — persist the result before iterating (CC) over it.
     */
   def pairsFromVecs(vecs: DataFrame, idCol: String,
                     p: SemDedupParams = SemDedupParams()): DataFrame = {
     graft.functions.GraftFunctions.register(vecs.sparkSession)
-    Text.selfJoinPairs(bandKeys(vecs, idCol, p), "bk", idCol,
-        p.cap, p.saltHotBuckets)
-      .select(col("a_id"), col("b_id")).distinct()
-      .join(vecs.select(col(idCol).as("a_id"), col("v").as("__va")), "a_id")
-      .join(vecs.select(col(idCol).as("b_id"), col("v").as("__vb")), "b_id")
-      .withColumn("sim", round(expr("cosine_sim(__va, __vb)"), 6))
+    Text.selfJoinPairs(vecs.select(col(idCol), col("v"), explodedBandKeys(p)),
+        "bk", idCol, p.cap, p.saltHotBuckets, payload = Seq("v"))
+      .withColumn("sim", round(expr("cosine_sim(a_v, b_v)"), 6))
       .filter(col("sim") >= p.simThreshold && !isnan(col("sim")))
       .select(col("a_id"), col("b_id"), col("sim"))
+      .distinct()
   }
 
   /** [[pairsFromVecs]] straight from a documents frame. */

@@ -119,23 +119,17 @@ object Text {
     * silent multi-hour straggler into an immediate, actionable error
     * naming the bucket.
     *
-    * Plan shape: one partial-agg count per key joined back on the
-    * same key — the join's exchange is shared with the self-join that
-    * follows (same key), so the guard adds no extra full-data shuffle
-    * at scale. The refusal rides a CASE inside the filter, evaluated
-    * per row AFTER the count join, so it fires from whichever task
-    * meets the hot bucket.
+    * Plan shape: one window count per key, so `frame` is read once
+    * (a count joined back would evaluate it twice). NULL keys form
+    * one window partition, so they pass through AND an all-NULL
+    * degenerate key is capped like any other. The refusal rides a
+    * CASE inside the filter, evaluated per row after the count, so it
+    * fires from whichever task meets the hot bucket.
     */
   def guardBuckets(frame: DataFrame, keyCol: String, cap: Int): DataFrame = {
     require(cap > 0, s"guardBuckets: cap $cap must be positive")
-    val counts = frame.groupBy(col(keyCol).as("__guard_k"))
-      .agg(count(lit(1)).as("__bucket_n"))
-    // null-safe join: groupBy puts NULL keys in one group, and <=>
-    // matches it — a plain equi-join would silently DROP null-key
-    // rows (breaking the pass-through contract) and let an all-NULL
-    // degenerate key escape the cap entirely
-    frame.join(counts, col(keyCol) <=> col("__guard_k"))
-      .drop("__guard_k")
+    import org.apache.spark.sql.expressions.Window
+    frame.withColumn("__bucket_n", count(lit(1)).over(Window.partitionBy(col(keyCol))))
       .filter(when(col("__bucket_n") > cap,
         raise_error(concat(
           lit("hot bucket: key '"), coalesce(col(keyCol).cast("string"), lit("NULL")),
@@ -175,15 +169,21 @@ object Text {
     * is graft's xx_hash64 — safe even for oracle-checked queries
     * because it never reaches the output.
     *
+    * Output: (keyCol, a_id, b_id), plus `a_<c>` and `b_<c>` for each
+    * `payload` column `c` of `frame` — the pair's own values ride the
+    * join, so callers need no join back on the ids.
+    *
     * EVALUATION contract (r18 ADVICE): the salted branch references
     * `frame` three times (one counts aggregation + the two sides of
     * the self-join; cold and hot rows share ONE join, so there is no
     * per-branch re-evaluation) — pass a PERSISTED frame when
     * `saltHotBuckets > 0`, or the upstream derivation runs 3×. The
-    * default branch has the same 3-reference shape via guardBuckets.
+    * default branch reads it once: both sides of the self-join reuse
+    * the one exchange below the guard's window count.
     */
   def selfJoinPairs(frame: DataFrame, keyCol: String, idCol: String,
-                    cap: Int, saltHotBuckets: Int = 0): DataFrame = {
+                    cap: Int, saltHotBuckets: Int = 0,
+                    payload: Seq[String] = Nil): DataFrame = {
     require(saltHotBuckets >= 0 && saltHotBuckets <= 256,
       s"selfJoinPairs: saltHotBuckets $saltHotBuckets out of 0..256")
     // the salt hash is graft's own xx_hash64 — self-register so the
@@ -192,12 +192,14 @@ object Text {
     graft.functions.GraftFunctions.register(frame.sparkSession)
     // <=> throughout: NULL keys form a bucket like they do in
     // guardBuckets — a plain === would silently drop their pairs
+    val out = Seq(col(s"a.$keyCol").as(keyCol),
+      col(s"a.$idCol").as("a_id"), col(s"b.$idCol").as("b_id")) ++
+      payload.flatMap(c => Seq(col(s"a.$c").as(s"a_$c"), col(s"b.$c").as(s"b_$c")))
     def pairsOf(f: DataFrame): DataFrame =
       f.as("a").join(f.as("b"),
           col(s"a.$keyCol") <=> col(s"b.$keyCol") &&
             col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(col(s"a.$keyCol").as(keyCol),
-          col(s"a.$idCol").as("a_id"), col(s"b.$idCol").as("b_id"))
+        .select(out: _*)
     if (saltHotBuckets == 0)
       return pairsOf(guardBuckets(frame, keyCol, cap))
     val s = saltHotBuckets
@@ -226,8 +228,7 @@ object Text {
           // pairs co-occur in s tasks; cold pairs only in (-1, -1))
           least(col("a.__g"), col("b.__g")) === col("a.__ta") &&
           greatest(col("a.__g"), col("b.__g")) === col("a.__tb"))
-      .select(col(s"a.$keyCol").as(keyCol),
-        col(s"a.$idCol").as("a_id"), col(s"b.$idCol").as("b_id"))
+      .select(out: _*)
   }
 
   /** Exact Jaccard similarity of two pre-distinct arrays. Two EMPTY

@@ -133,6 +133,12 @@ case class ProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       registered.view.flatMap(d => tryRewrite(agg, d)).headOption.getOrElse(agg)
   }
 
+  /** `path` as a relation's root path prints it: qualified, no scheme. */
+  private def rootOf(path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toUri.getPath
+  }
+
   private def pathsOf(lr: LogicalRelation): Seq[String] = lr.relation match {
     case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toUri.getPath)
     case _ => Nil
@@ -153,8 +159,9 @@ case class ProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def tryRewrite(agg: Aggregate, d: ProjectionDef): Option[Aggregate] = {
     val (baseLr, filters) = strip(agg.child, Nil).getOrElse(return None)
-    if (!pathsOf(baseLr).exists(p => p == d.basePath || p.endsWith(d.basePath)))
-      return None
+    // the scan must cover the base and nothing else: a relation over
+    // the base plus a later part holds rows the projection never saw
+    if (pathsOf(baseLr) != Seq(rootOf(d.basePath))) return None
     // Staleness gate: never answer from a projection whose base table
     // was rewritten after materialize — drop the entry and scan base.
     if (staleAndDrop(spark, d)) return None

@@ -127,10 +127,8 @@ object PipelineQueries {
   /** Duplicate-group members with their group's self-Jaccard
     * (rep_id, doc_id, jrep), guarded at [[LshBucketCap]] — the
     * expansion frame pipe_minhash_lsh self-joins for intra-group
-    * pairs. Cached DISK_ONLY like the other family frames (r17 ADVICE:
-    * guardBuckets evaluates its input on both the row side and the
-    * counts side, so an unpersisted subtree here was the exact
-    * double-computation the pipe_blocking comment warns about).
+    * pairs. Cached DISK_ONLY like the other family frames, so the
+    * queries that reuse it do not re-run the group/Jaccard subtree.
     */
   private[graft] val lshMembersCache =
     new graft.ops.LruCache[(org.apache.spark.sql.SparkSession, String),
@@ -514,9 +512,8 @@ object PipelineQueries {
       // within-block pair count is what must not go quadratic. Since
       // r17 the self-join is hot-block GUARDED like the LSH band join:
       // a boilerplate-heavy corpus degenerates this key the same way.
-      // Persist BEFORE the guard: guardBuckets reads its input on both
-      // the row side and the counts side, so guarding the raw
-      // tokenize subtree would shingle the corpus twice.
+      // Persisted DISK_ONLY before the guard; the guard is a window
+      // count, so one exchange below it feeds both join sides.
       // r20: compare 55-bit shingle HASHES (Text.hash55, the family's
       // cross-engine md5 convention — pipe_minhash_lsh's jaccard
       // already runs over h1 hashes) instead of raw 2-gram strings:

@@ -189,6 +189,21 @@ class GuardedLshSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == naive(cold))
   }
 
+  test("selfJoinPairs: payload columns ride both hot-bucket policies") {
+    val s = spark
+    import s.implicits._
+    val frame = (1L to 40L).map(i => (i, if (i <= 30) "hot" else s"c${i % 3}", i * 10))
+      .toDF("doc_id", "bk", "w")
+    def pairs(cap: Int, salts: Int) =
+      Text.selfJoinPairs(frame, "bk", "doc_id", cap, salts, payload = Seq("w"))
+        .select($"a_id", $"b_id", $"a_w", $"b_w").as[(Long, Long, Long, Long)]
+        .collect().toSet
+    val plain = pairs(100, 0)
+    assert(plain.size == 30 * 29 / 2 + 6 + 3 + 3)
+    assert(plain.forall { case (a, b, wa, wb) => wa == a * 10 && wb == b * 10 })
+    assert(pairs(20, 3) == plain)
+  }
+
   test("pipe_minhash_lsh under spark.graft.lsh.saltHotBuckets stays identical") {
     // the conf-gated escape hatch changes distribution, never output:
     // run the family build on a FRESH fixture copy with salting on and

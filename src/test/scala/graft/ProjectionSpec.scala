@@ -146,4 +146,26 @@ class ProjectionSpec extends AnyFunSuite {
       .groupBy($"o_orderstatus").agg(count(lit(1)).as("n"))
     assert(!filterQ.queryExecution.executedPlan.toString.contains("orders_by_status"))
   }
+
+  test("a base with a part inserted after materialize is not answered from the projection") {
+    Graft.sql(spark, "CREATE TABLE proj_parts ENGINE = MergeTree ORDER BY k AS " +
+      "SELECT number AS k, CAST(number % 3 AS INT) AS g FROM numbers(30)")
+    val base = spark.table("proj_parts").inputFiles
+      .map(f => new java.io.File(new java.net.URI(f).getPath).getParent).distinct
+    assert(base.length == 1)
+    Projections.materialize(spark, "spec_parts_by_g", base.head,
+      s"${System.getProperty("java.io.tmpdir")}/graft_proj_spec/parts_by_g",
+      Seq("g"), Seq(Projections.Measure("count", "1", "parts_cnt")))
+    Projections.install(spark)
+    def q() = spark.table("proj_parts").groupBy($"g").agg(count(lit(1)).as("n"))
+    assert(q().queryExecution.optimizedPlan.toString.contains("parts_cnt"))
+    Graft.sql(spark, "INSERT INTO proj_parts SELECT number + 100 AS k, " +
+      "CAST(0 AS INT) AS g FROM numbers(5)")
+    val after = q()
+    assert(!after.queryExecution.optimizedPlan.toString.contains("parts_cnt"),
+      "a projection of the first part must not answer for base plus a new part")
+    assert(after.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
+      Map(0 -> 15L, 1 -> 10L, 2 -> 10L))
+    Graft.sql(spark, "DROP TABLE proj_parts")
+  }
 }
