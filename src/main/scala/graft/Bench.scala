@@ -11,12 +11,12 @@ object Bench {
       : Seq[(String, Double, Boolean)] = {
     // noop sink forces full evaluation of every projected column
     // (count() would let Catalyst prune unreferenced expressions).
-    def run(name: String): Boolean =
+    def run(name: String): Option[Throwable] =
       try {
         queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        true
-      } catch { case _: Throwable => false }
+        None
+      } catch { case t: Throwable => Some(t) }
     // Untimed warmup: pay JVM classloading + codegen once, outside the
     // timed loop, so per-query numbers are round-comparable. One query
     // per heavyweight codegen family (scan+agg, grouping sets, window):
@@ -33,19 +33,26 @@ object Bench {
     // protocol, inside a single driver invocation. Codegen/data
     // caches are warm either way; plans are rebuilt per run.
     val names = queries.keys.toSeq.sorted
-    def sweep(): Map[String, (Double, Boolean)] = names.map { name =>
+    def sweep(): Map[String, (Double, Option[Throwable])] = names.map { name =>
       val t0 = System.nanoTime()
-      val ok = run(name)
-      name -> (((System.nanoTime() - t0) / 1e9, ok))
+      val err = run(name)
+      name -> (((System.nanoTime() - t0) / 1e9, err))
     }.toMap
     val s1 = sweep()
     val s2 = sweep()
     names.map { name =>
-      val (t1, ok1) = s1(name)
-      val (t2, ok2) = s2(name)
-      (name, math.min(t1, t2), ok1 && ok2)
+      val (t1, e1) = s1(name)
+      val (t2, e2) = s2(name)
+      // the failure keeps its cause; the JSON line stays unchanged
+      e1.orElse(e2).foreach(e =>
+        Console.err.println(s"Bench: $name failed: ${cause(e)}"))
+      (name, math.min(t1, t2), e1.isEmpty && e2.isEmpty)
     }
   }
+
+  /** Exception class and the first line of its message. */
+  private def cause(e: Throwable): String = e.getClass.getName +
+    Option(e.getMessage).flatMap(_.linesIterator.nextOption()).fold("")(": " + _)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

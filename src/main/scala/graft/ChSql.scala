@@ -292,11 +292,8 @@ object ChSql {
     * the analog of CH's `user_files_path`. `Graft.init` points it at
     * the fixture dir; absolute paths bypass it.
     */
-  private val dataDirs =
-    scala.collection.concurrent.TrieMap[SparkSession, String]()
-
   def setDataDir(spark: SparkSession, dir: String): Unit =
-    dataDirs.put(spark, dir)
+    SessionCache(spark).dataDir = Some(dir)
 
   // ---- CH external dictionaries ------------------------------------
   // CH dictionaries are fully in-RAM key→attribute structures
@@ -687,7 +684,7 @@ object ChSql {
           val p0 = m.group(1)
           val path =
             if (p0.startsWith("/")) p0
-            else dataDirs.get(spark).map(d => s"$d/$p0").getOrElse(p0)
+            else SessionCache(spark).dataDir.map(d => s"$d/$p0").getOrElse(p0)
           val fmt = Option(m.group(2))
             .map(_.toLowerCase(java.util.Locale.ROOT))
             .getOrElse(p0.replaceAll(".*\\.", "").toLowerCase(java.util.Locale.ROOT))
@@ -2038,22 +2035,15 @@ object ChSql {
     * take window/gap parameters in SECONDS (CH semantics on a
     * DateTime column); conditions are null-safe-coalesced to false.
     */
-  /** Parameter-mangled UDAF names already registered per session —
+  /** Parameter-mangled UDAF names are registered once per session —
     * the name encodes every parameter, so a second registration is
     * byte-identical; skipping it saves ~1 s of Aggregator
     * construction + registry work per query that was re-paid on
-    * every `sql_ch_parametric`-shaped run. (Sessions leak from the
-    * map only as long as they live — same contract as Graft.init's
-    * registeredSessions set.)
+    * every `sql_ch_parametric`-shaped run.
     */
-  private val registeredUdafs =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-        java.lang.Boolean]())
-
   private def registerOnce(spark: SparkSession, fn: String)(
       mk: => org.apache.spark.sql.expressions.UserDefinedFunction): Unit =
-    if (registeredUdafs.add((spark, fn))) spark.udf.register(fn, mk)
+    SessionCache(spark).once(s"udaf:$fn") { spark.udf.register(fn, mk) }
 
   private def rewriteParametric(spark: SparkSession, q0: String): String = {
     var q = q0
@@ -3784,19 +3774,16 @@ object ChSql {
   // ---- SETTINGS clause + query cache -------------------------------
   // CH queries routinely end with `SETTINGS k = v, …`. The clause is
   // peeled off and parsed; `use_query_cache = 1` engages a result
-  // cache keyed by the settings-stripped query text (entries persist
-  // MEMORY_AND_DISK and live until `SYSTEM DROP QUERY CACHE`, the
-  // upstream eviction statement — like CH's cache, staleness after
-  // table mutations is the user's contract). Unknown settings are
-  // accepted and ignored, which is exactly CH's behavior for
-  // tuning-only settings an engine doesn't act on.
+  // cache keyed by the settings-stripped query text in the session's
+  // SessionCache (persisted MEMORY_AND_DISK; bounded by its LRU, and
+  // `SYSTEM DROP QUERY CACHE` drops this session's entries — like CH's
+  // cache, staleness after table mutations is the user's contract).
+  // Unknown settings are accepted and ignored, which is exactly CH's
+  // behavior for tuning-only settings an engine doesn't act on.
   private val settingsRe =
     """(?is)\bSETTINGS\s+([A-Za-z_]\w*\s*=\s*[^,\s]+(?:\s*,\s*[A-Za-z_]\w*\s*=\s*[^,\s]+)*)\s*$""".r
   private val dropCacheRe =
     """(?is)^\s*SYSTEM\s+DROP\s+QUERY\s+CACHE\s*$""".r
-  private val queryCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
   /** CH system.query_log analog: a bounded ring of the session's
     * front-door queries (id, epoch-ms event time, verbatim text).
     * Driver-side metadata only — never row data.
@@ -3931,8 +3918,7 @@ object ChSql {
     // is excluded so SELECTs over it don't self-append recursively
     if (!queryLogRe.findFirstIn(query).isDefined) logQuery(query0)
     dropCacheRe.findFirstMatchIn(query).foreach { _ =>
-      queryCache.values.foreach(_.unpersist())
-      queryCache.clear()
+      SessionCache(spark).drop("query")
       import spark.implicits._
       return Seq("query cache dropped").toDF("status")
     }
@@ -3948,11 +3934,10 @@ object ChSql {
       if (k != "use_query_cache") applySetting(spark, k, v)
     }
     if (settings.get("use_query_cache").exists(v => v == "1" || v == "true"))
-      return queryCache.getOrElseUpdate(queryNoSettings, {
-        val df = run(spark, queryNoSettings)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df
-      })
+      return SessionCache(spark).getOrBuild("query", queryNoSettings) {
+        run(spark, queryNoSettings)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }
     runStatement(spark, queryNoSettings)
   }
 

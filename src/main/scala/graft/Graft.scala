@@ -14,14 +14,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  // function registrations are per-SESSION idempotent state that no
-  // statement (DML, CREATE/DROP FUNCTION on user names) un-registers —
-  // do them once; re-registering ~170 names + parsing ~30 macro bodies
-  // on every init was a measurable fixed cost per SQL-front-door query
-  private val registeredSessions =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
   /** Register all fixture tables as temp views + custom functions +
     * the ClickHouse-spelled function dialect (sipHash64, toStartOfDay,
     * lengthUTF8, multiIf, … — see [[graft.functions.ChDialect]]).
@@ -38,31 +30,26 @@ object Graft {
     // cast to TIMESTAMP under the session zone (Tables.scala), so a
     // consumer-built non-UTC session would silently shift every
     // events.ts value. CH's analog is the server timezone; this
-    // library's contract is UTC (same as all five bundled mains).
+    // library's contract is UTC (same as all eight bundled mains).
     if (spark.conf.get("spark.sql.session.timeZone") != "UTC")
       spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // Mark the session registered only once ALL registrations succeed:
-    // a throw mid-registration (e.g. a duplicate-name guard trip) must
-    // leave the session eligible for a clean retry, never half-registered
-    // with later names missing (UNRESOLVED_ROUTINE on toString/dictGet/…).
-    if (registeredSessions.add(spark)) {
-      try {
-        GraftFunctions.register(spark)
-        graft.functions.ChDialect.register(spark)
-        // unparameterized custom Aggregators under their CH spellings
-        spark.udf.register("groupBitmap",
-          org.apache.spark.sql.functions.udaf(new graft.ops.Aggregates.GroupBitmap))
-        // uniqTheta at the default capacity: the sketch column (k-min
-        // hash array) — combine with size/array_union/… for estimates
-        spark.udf.register("uniqTheta",
-          org.apache.spark.sql.functions.udaf(new graft.ops.Aggregates.ThetaSketch(4096)))
-        graft.plans.LimitByPlan.install(spark)
-        graft.plans.DedupAggregateCalls.install(spark)
-      } catch {
-        case t: Throwable =>
-          registeredSessions.remove(spark)
-          throw t
-      }
+    // Function registrations are per-SESSION state that no statement
+    // un-registers — do them once (~170 names + ~30 macro bodies were a
+    // fixed cost per front-door query). A throw mid-registration leaves
+    // the session unmarked for a clean retry, never half-registered
+    // (UNRESOLVED_ROUTINE on toString/dictGet/…).
+    SessionCache(spark).once("graft.init") {
+      GraftFunctions.register(spark)
+      graft.functions.ChDialect.register(spark)
+      // unparameterized custom Aggregators under their CH spellings
+      spark.udf.register("groupBitmap",
+        org.apache.spark.sql.functions.udaf(new graft.ops.Aggregates.GroupBitmap))
+      // uniqTheta at the default capacity: the sketch column (k-min
+      // hash array) — combine with size/array_union/… for estimates
+      spark.udf.register("uniqTheta",
+        org.apache.spark.sql.functions.udaf(new graft.ops.Aggregates.ThetaSketch(4096)))
+      graft.plans.LimitByPlan.install(spark)
+      graft.plans.DedupAggregateCalls.install(spark)
     }
     Tables.names.foreach { t =>
       Tables(spark, dir, t).createOrReplaceTempView(t)

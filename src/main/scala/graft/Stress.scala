@@ -114,7 +114,6 @@ object Stress {
       .appName(s"graft-stress-${mult}x").master("local[32]")
       .config("spark.sql.shuffle.partitions", "64")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", "16g")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -29,10 +29,9 @@ object Tables {
   // is reusable across queries. Re-running spark.read.parquet for
   // every query re-listed files and re-read footers: a measurable
   // per-query driver cost once a session runs hundreds of queries.
-  // (Mutation statements snapshot into NEW paths and re-point the
+  // The frame is a "table" entry of the bounded SessionCache.
+  // (Front-door writes go to new part directories and re-point the
   // temp view; they never invalidate these source frames.)
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
   /** Fixture files are written as a SINGLE parquet row group, and
     * Spark assigns a row group to the one byte-range split containing
@@ -79,9 +78,11 @@ object Tables {
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    cache.computeIfAbsent((spark, dir, name), { key =>
-      val df = parallelize(spark, spark.read.parquet(s"$dir/$name.parquet"))
-      if (name == "events")
+    SessionCache(spark).getOrBuild("table", (dir, name)) {
+      val df = spark.read.parquet(s"$dir/$name.parquet")
+      // parallelize last: the cached frame is the persisted one, so an
+      // eviction unpersists it
+      parallelize(spark, if (name == "events")
         df.schema("ts").dataType match {
           case org.apache.spark.sql.types.LongType =>
             df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -93,6 +94,6 @@ object Tables {
             df.withColumn("ts",
               col("ts").cast(org.apache.spark.sql.types.TimestampType))
         }
-      else df
-    })
+      else df)
+    }
 }

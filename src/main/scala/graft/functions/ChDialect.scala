@@ -27,32 +27,14 @@ object ChDialect {
 
   /** joinGet lookup maps, collected ONCE per (session, table, column,
     * analyzed-plan fingerprint) instead of on every analysis of every
-    * query using the function. The fingerprint is the view's analyzed
-    * plan semanticHash: a mutation snapshots into a new path and
-    * re-points the temp view, so its hash changes and the stale map is
-    * never served. Bounded: entries are 100k-row-capped maps held in a
-    * 256-entry access-order LRU — eviction is per-entry (never a
-    * clear-all that could race a just-inserted hot entry), and entries
-    * keyed by closed sessions or stale fingerprints age out of the LRU
-    * instead of accumulating. The build (a Spark collect of up to 100k
-    * rows) runs OUTSIDE the map's mutex — a slow collect must not block
-    * every other joinGet on every other table, and a re-entrant joinGet
-    * reached from inside the build (a view whose plan itself calls
-    * joinGet) must not deadlock or corrupt the LinkedHashMap. Two
-    * threads racing on the same cold key may both build; putIfAbsent
-    * keeps exactly one result (a rare duplicate collect is the accepted
-    * price — the alternative, holding the lock, serialized ALL tables).
+    * query using the function — entries of kind "joinGet" in the
+    * session's [[graft.SessionCache]]. The fingerprint is the view's
+    * analyzed plan semanticHash: a mutation snapshots into a new path
+    * and re-points the temp view, so its hash changes and the stale map
+    * is never served; stale entries age out of the session LRU. The
+    * collect runs outside the cache lock, so a re-entrant joinGet (a
+    * view whose plan itself calls joinGet) cannot deadlock.
     */
-  private val joinGetCache =
-    new graft.ops.LruCache[(SparkSession, String, String, Int),
-      (Literal, DataType, DataType)](256, _ => ())
-
-  /** Observable build count, so a spec can assert the cache actually
-    * prevents re-collects (not part of the public surface).
-    */
-  private[graft] def joinGetBuilds: java.util.concurrent.atomic.AtomicLong =
-    joinGetCache.builds
-
   private def joinGetMapLit(spark: SparkSession, tblE: Expression,
       colE: Expression): (Literal, DataType, DataType) = {
     def strLit(e: Expression, what: String): String = e match {
@@ -64,11 +46,7 @@ object ChDialect {
     val valueCol = strLit(colE, "the value column")
     val df = spark.table(tbl)
     val fp = df.queryExecution.analyzed.semanticHash()
-    // LruCache builds OUTSIDE its mutex (a slow 100k-row collect must
-    // not block every other table's lookups; a re-entrant joinGet
-    // reached from inside the build must not deadlock) — the shared
-    // class is this method's old hand-rolled pattern, extracted.
-    joinGetCache.getOrBuild((spark, tbl, valueCol, fp)) {
+    graft.SessionCache(spark).getOrBuild("joinGet", (tbl, valueCol, fp)) {
       val keyCol = df.columns.headOption.getOrElse(
         throw new IllegalArgumentException(
           s"joinGet: table '$tbl' has no columns"))

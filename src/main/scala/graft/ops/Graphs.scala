@@ -71,25 +71,28 @@ object Graphs {
       .mapPartitions(_.map { case (k, _) => (k, k) },
         preservesPartitioning = true)
 
-  /** Bounded registry for the RESULT frames' persisted RDDs: the
+  /** Bounded pin list for the RESULT frames' persisted RDDs: the
     * returned labels are lazy, so the backing RDD must stay persisted
     * past the call — but a session sweeping hundreds of queries must
     * not accumulate one pinned RDD per CC call forever (r19 verdict
-    * "what's wrong" #4). The LruCache unpersists the eldest beyond 8
+    * "what's wrong" #4). Each call pins a fresh RDD and nothing looks
+    * one up, so the list is a FIFO that unpersists the eldest beyond 8
     * live results; lineage stays intact, so a long-retained result
     * frame consumed after eviction recomputes instead of erroring.
     */
-  private val liveResults =
-    new LruCache[Long, org.apache.spark.rdd.RDD[_]](8, _.unpersist(false))
-  private def registerResult(r: org.apache.spark.rdd.RDD[_]): Unit =
-    liveResults.getOrBuild(r.id)(r)
+  private final class Pins[T](unpersist: T => Unit) {
+    private val q = new java.util.ArrayDeque[T]()
+    def add(t: T): Unit = q.synchronized {
+      q.addLast(t); if (q.size > 8) Some(q.pollFirst()) else None
+    }.foreach(unpersist)
+  }
+  private val pinnedRdds = new Pins[org.apache.spark.rdd.RDD[_]](_.unpersist(false))
+  private def registerResult(r: org.apache.spark.rdd.RDD[_]): Unit = pinnedRdds.add(r)
   /** Same convention for the generic (non-Long) paths' persisted
-    * result frames; keyed by the frame's RDD id (unique per call).
+    * result frames.
     */
-  private val liveResultFrames =
-    new LruCache[Long, DataFrame](8, _.unpersist(false))
-  private def registerResult(df: DataFrame): Unit =
-    liveResultFrames.getOrBuild(df.rdd.id)(df)
+  private val pinnedFrames = new Pins[DataFrame](_.unpersist(false))
+  private def registerResult(df: DataFrame): Unit = pinnedFrames.add(df)
 
   /** Connected components of the undirected graph given by `edges`
     * (two numeric columns `srcCol`, `dstCol`). Returns one row per

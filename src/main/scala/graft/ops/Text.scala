@@ -259,9 +259,9 @@ object Text {
     *
     * Mechanics: each token position emits its k-gram seed hash (one
     * md5 per position — the minhash chain's linear map-side cost
-    * class); ONE groupBy counts global seed occurrences; positions
-    * whose seed reaches `minOcc` join back on the hash (AQE broadcasts
-    * the duplicated-hash set when it is small, the common case) and
+    * class); ONE window count partitioned by the hash `h` tags every
+    * position with its seed's global occurrence count, read from the
+    * emit once; positions whose seed reaches `minOcc` stay and
     * interval-merge under a window PARTITIONED BY document — bounded
     * by document length, never global. A seed at pos covers tokens
     * [pos, pos+k-1]; a new span starts when pos exceeds the running
@@ -269,10 +269,12 @@ object Text {
     * "xspan") — collisions ~2⁻⁶⁰ and bit-identical in the DuckDB
     * oracle, which re-derives this whole chain.
     *
-    * 100-TB posture: linear emit, one count shuffle, one equi-join on
-    * the same key, per-document windows — no quadratic term anywhere.
-    * At real corpus lengths use the paper's k=50 instead of the
-    * fixture-scaled default.
+    * 100-TB posture: linear emit, ONE shuffle of the whole seed emit
+    * by `h` — always paid, even when few seeds repeat (the old
+    * groupBy-count + join-back could broadcast a small duplicated-hash
+    * set, but read the emit twice); WindowExec spills, so a hot seed
+    * cannot pin memory; then per-document windows — no quadratic term
+    * anywhere. At real corpus lengths use the paper's k=50.
     *
     * `fastHash = true` is the production-hash mode (the
     * [[hashPairsFast]] trade): graft's raw-bytes XXH64 expression in

@@ -77,10 +77,6 @@ object Vectors {
     (model.transform(feat).drop("__fv"), model.clusterCenters.map(_.toArray))
   }
 
-  private[graft] val ivfCache =
-    new LruCache[(String, String, Int, Long), (DataFrame, Array[Array[Double]])](
-      256, { case (df, _) => df.unpersist() })
-
   /** Key of the most recent [[ivfIndexCached]] build/lookup — the
     * pipe_ann_ivf dynOracle reads it at dump time to inline the SAME
     * centroids the gate query just used (Verify runs every query
@@ -88,16 +84,16 @@ object Vectors {
     */
   @volatile private[graft] var lastIvfKey: Option[(String, String, Int, Long)] = None
 
-  /** [[ivfIndex]] built once per (corpus key, column, k, seed) and
-    * persisted — index BUILD is amortized across queries, exactly how
-    * a production ANN index is used (queries never re-run k-means).
-    * Bounded: 256-entry LRU, unpersist-on-evict.
+  /** [[ivfIndex]] built once per (session, corpus key, column, k,
+    * seed) and persisted — index BUILD is amortized across queries,
+    * exactly how a production ANN index is used (queries never re-run
+    * k-means). Held in the session's [[graft.SessionCache]] of `emb`.
     */
   def ivfIndexCached(emb: DataFrame, key: String, vecCol: String, k: Int, seed: Long)
       : (DataFrame, Array[Array[Double]]) = {
     val full = (key, vecCol, k, seed)
     lastIvfKey = Some(full)
-    ivfCache.getOrBuild(full) {
+    graft.SessionCache(emb.sparkSession).getOrBuild("ivf", full) {
       val (a, c) = ivfIndex(emb, vecCol, k, seed)
       (a.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), c)
     }
@@ -187,30 +183,27 @@ object Vectors {
     */
   def ivfOracleSql(): Option[String] = ivfOracleSqlMp(1)
 
-  /** Shared centroid lookup for the ivf dynOracles: cached centroids
-    * for the most recent index key, else rebuild via an active session
-    * (None — degrading that entry only — when neither is possible).
+  /** Shared centroid lookup for the ivf dynOracles: the active
+    * session's index for the most recent key, built on a miss (None —
+    * degrading that entry only — without a session or on failure).
     */
   private def cachedCentroids(): Option[Seq[Seq[Double]]] = {
     val key = lastIvfKey.getOrElse(
       (sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"),
         "embedding", 8, 42L))
-    ivfCache.get(key).map(_._2.toSeq.map(_.toSeq)).orElse {
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .flatMap { s =>
-          try Some(graft.Tables(s, key._1, "embeddings"))
-            .map(emb => ivfIndexCached(emb, key._1, key._2, key._3, key._4)
-              ._2.toSeq.map(_.toSeq))
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(
-                s"[oracle] ivf centroids unavailable for ${key._1}: " +
-                  e.getMessage)
-              None
-          }
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .flatMap { s =>
+        try Some(ivfIndexCached(graft.Tables(s, key._1, "embeddings"),
+          key._1, key._2, key._3, key._4)._2.toSeq.map(_.toSeq))
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(
+              s"[oracle] ivf centroids unavailable for ${key._1}: " +
+                e.getClass.getName + ": " + e.getMessage)
+            None
         }
-    }
+      }
   }
 
   /** dynOracle for pipe_ann_ivf_mp: the [[ivfOracleSql]] pattern with

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Det, QDef, Tables}
+import graft.{Det, QDef, SessionCache, Tables}
 import graft.functions.GraftFunctions
 import graft.ops.{Graphs, Multimodal, SemDedupParams, Text, Vectors}
 import org.apache.spark.sql.expressions.Window
@@ -34,12 +34,9 @@ object PipelineQueries {
     * join instead of a quadratic hot bucket. One shuffle (window-min
     * over md5(text)); cached like the other family frames.
     */
-  private[graft] val lshGroupsCache =
-    new graft.ops.LruCache[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame](256, _.unpersist())
   private def lshGroups(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
-    lshGroupsCache.getOrBuild((s, dir)) {
+    SessionCache(s).getOrBuild("lshGroups", dir) {
       import s.implicits._
       Tables(s, dir, "documents")
         .select($"doc_id", md5($"text").as("__th"))
@@ -53,17 +50,13 @@ object PipelineQueries {
     * r17 (doc_id ∈ rep ids of [[lshGroups]]): identical texts are
     * shingled and min-hashed once. Shared by the whole near-dup family:
     * one md5 pass + one DISK_ONLY materialization per (session,
-    * fixture dir). Bounded: 256-entry LRU with unpersist-on-evict
-    * (graft.ops.LruCache) — on a long-lived session over many fixture
-    * directories the DISK_ONLY persists age out instead of
-    * accumulating.
+    * fixture dir), held like every family frame in the session's
+    * [[graft.SessionCache]]: over many fixture directories the
+    * DISK_ONLY persists age out of its LRU instead of accumulating.
     */
-  private[graft] val lshDocsCache =
-    new graft.ops.LruCache[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame](256, _.unpersist())
   private def lshDocs(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
-    lshDocsCache.getOrBuild((s, dir)) {
+    SessionCache(s).getOrBuild("lshDocs", dir) {
       import s.implicits._
       val reps = lshGroups(s, dir)
         .filter($"doc_id" === $"rep_id").select($"doc_id")
@@ -86,11 +79,8 @@ object PipelineQueries {
     * One definition so the propagation and star-contraction gate
     * entries provably run the same graph. Cached DISK_ONLY like
     * [[lshDocs]] — one band-join + Jaccard materialization for the
-    * whole family, aged out by the same unpersist-on-evict LRU.
+    * whole family, aged out of the same session LRU.
     */
-  private[graft] val lshPairsCache =
-    new graft.ops.LruCache[(org.apache.spark.sql.SparkSession, String, Int),
-      org.apache.spark.sql.DataFrame](256, _.unpersist())
   private def lshPairs(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     // hot-bucket POLICY (r17 verdict task 3): default 0 = the loud
@@ -106,7 +96,7 @@ object PipelineQueries {
     // answer — only a wrong execution shape.
     val saltMode = s.conf.getOption("spark.graft.lsh.saltHotBuckets")
       .map(_.toInt).getOrElse(0)
-    lshPairsCache.getOrBuild((s, dir, saltMode)) {
+    SessionCache(s).getOrBuild("lshPairs", (dir, saltMode)) {
       import s.implicits._
       val docs = lshDocs(s, dir)
       val bands =
@@ -130,12 +120,9 @@ object PipelineQueries {
     * pairs. Cached DISK_ONLY like the other family frames, so the
     * queries that reuse it do not re-run the group/Jaccard subtree.
     */
-  private[graft] val lshMembersCache =
-    new graft.ops.LruCache[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame](256, _.unpersist())
   private def lshMembers(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
-    lshMembersCache.getOrBuild((s, dir)) {
+    SessionCache(s).getOrBuild("lshMembers", dir) {
       import s.implicits._
       Text.guardBuckets(
         lshGroups(s, dir)
@@ -159,9 +146,6 @@ object PipelineQueries {
     * empty get NO star edges: their intra-group Jaccard is NULL (0/0)
     * in both engines, so the unguarded graph never contained them.
     */
-  private[graft] val lshEdgesCache =
-    new graft.ops.LruCache[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame](256, _.unpersist())
   private def lshEdges(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
     // persisted like the other family frames — connected components
@@ -169,7 +153,7 @@ object PipelineQueries {
     // unpersisted union+join here re-executes every round (measured
     // r17: the three CC entries 1.2–1.7 s → 2.9–4.5 s before this
     // cache; back after)
-    lshEdgesCache.getOrBuild((s, dir)) {
+    SessionCache(s).getOrBuild("lshEdges", dir) {
       import s.implicits._
       val pairs = lshPairs(s, dir).select($"doc_a", $"doc_b")
       val star = lshGroups(s, dir).filter($"doc_id" =!= $"rep_id")
@@ -187,17 +171,13 @@ object PipelineQueries {
     * Components are small INTEGERS, so dots/norms are exact in both
     * engines. Cached DISK_ONLY like the other family frames.
     */
-  private[graft] val semVecsCache =
-    new graft.ops.LruCache[
-      (org.apache.spark.sql.SparkSession, String, Int, Int, Int),
-      org.apache.spark.sql.DataFrame](256, _.unpersist())
   private def semVecs(s: org.apache.spark.sql.SparkSession, dir: String,
                       p: SemDedupParams = SemDedupParams())
       : org.apache.spark.sql.DataFrame =
     // keyed by the embed-stage parameters only (band grouping happens
     // downstream): two band geometries over the same (dims, planes)
     // share one persisted embedding frame
-    semVecsCache.getOrBuild((s, dir, p.shingleN, p.dims, p.nPlanes)) {
+    SessionCache(s).getOrBuild("semVecs", (dir, p.shingleN, p.dims, p.nPlanes)) {
       graft.ops.SemDedup
         .featureVecs(Tables(s, dir, "documents"), "doc_id", "text", p)
         .persist(StorageLevel.DISK_ONLY)
@@ -209,14 +189,10 @@ object PipelineQueries {
     * cap) confirmed at rounded cosine ≥ 0.6 — near-dups measure ~0.98,
     * unrelated ~0. Persisted: the CC stage iterates over this frame.
     */
-  private[graft] val semPairsCache =
-    new graft.ops.LruCache[
-      (org.apache.spark.sql.SparkSession, String, SemDedupParams),
-      org.apache.spark.sql.DataFrame](256, _.unpersist())
   private def semPairs(s: org.apache.spark.sql.SparkSession, dir: String,
                        p: SemDedupParams = SemDedupParams())
       : org.apache.spark.sql.DataFrame =
-    semPairsCache.getOrBuild((s, dir, p)) {
+    SessionCache(s).getOrBuild("semPairs", (dir, p)) {
       import s.implicits._
       graft.ops.SemDedup.pairsFromVecs(semVecs(s, dir, p), "doc_id", p)
         .select($"a_id".as("doc_a"), $"b_id".as("doc_b"), $"sim")

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.ChDialect
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the CH joinGet contract and the builder cache:
@@ -9,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   sql-reference/functions/other-functions#joinget];
   * - `joinGetOrNull` is the NULL-returning spelling;
   * - the collected lookup map is cached per (session, table, column,
-  *   plan fingerprint): re-analyzing queries must NOT re-collect.
+  *   plan fingerprint) in the session's [[SessionCache]]:
+  *   re-analyzing queries must NOT re-collect.
   */
 class JoinGetSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -31,10 +31,10 @@ class JoinGetSpec extends AnyFunSuite {
     Graft.init(spark, "/root/testdata/sf0.001")
     // prime the (region, r_name) entry
     Graft.sql(spark, "SELECT joinGet('region', 'r_name', 1) AS x").head()
-    val primed = ChDialect.joinGetBuilds.get()
+    val primed = SessionCache(spark).builds("joinGet")
     Graft.sql(spark, "SELECT joinGet('region', 'r_name', 2) AS x").head()
     Graft.sql(spark, "SELECT joinGetOrNull('region', 'r_name', 3) AS x").head()
-    assert(ChDialect.joinGetBuilds.get() == primed,
+    assert(SessionCache(spark).builds("joinGet") == primed,
       "joinGet re-collected a table the cache should have served")
   }
 }
