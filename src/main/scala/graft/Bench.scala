@@ -9,21 +9,10 @@ object Bench {
   def runAll(spark: SparkSession, sfDir: String,
              queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame])
       : Seq[(String, Double, Boolean)] = {
-    // noop sink forces full evaluation of every projected column
-    // (count() would let Catalyst prune unreferenced expressions).
     def run(name: String): Option[Throwable] =
-      try {
-        queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        None
-      } catch { case t: Throwable => Some(t) }
-    // Untimed warmup: pay JVM classloading + codegen once, outside the
-    // timed loop, so per-query numbers are round-comparable. One query
-    // per heavyweight codegen family (scan+agg, grouping sets, window):
-    // a cold grouping-sets plan alone costs ~5 s of generated-class
-    // compilation that otherwise lands on the first timed run.
-    Seq("q1_flagship", "agg_rollup", "window_rank")
-      .filter(queries.contains).foreach(run)
+      try { Harness.force(queries(name)(spark, sfDir)); None }
+      catch { case t: Throwable => Some(t) }
+    Harness.warmup(spark, sfDir, queries)
     // Best-of-2 per query, taken across TWO FULL SWEEPS rather than
     // back-to-back (r17 verdict "what's wrong" #2: the official number
     // was hostage to run ordering under drifting host load). Same
@@ -56,16 +45,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // The prescribed bench environment is local[32] with 32 shuffle
-    // partitions (single JVM, 32 executor threads).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     val results = runAll(spark, sfDir, SparkEntry.queries)
     val qs = results.map { case (k, v, _) => s""""$k":$v""" }

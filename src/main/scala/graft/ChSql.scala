@@ -2122,7 +2122,7 @@ object ChSql {
         // graft_quantile_exact (functions/QuantileExact.scala), not
         // Spark's percentile: same interpolation arithmetic
         // bit-for-bit, but raw primitive-vector state instead of a
-        // boxed OpenHashMap — ~10× cheaper per row (PERF.md
+        // boxed OpenHashMap — ~10× cheaper per row (round 12,
         // sql_ch_parametric), and CH quantileExact's own O(n) shape
         require(params.size == 1, s"$name0 takes one level parameter"); nArgs(1)
         s"graft_quantile_exact(CAST(${args.head} AS DOUBLE), " +
@@ -2383,7 +2383,7 @@ object ChSql {
         // two-level Expand regroup that breaks the single
         // ObjectHashAggregate pass when mixed with percentile-family
         // neighbours (3 exchanges instead of 1 — measured ~0.9 s on
-        // sql_ch_parametric, PERF.md). The capped-set Aggregator is
+        // sql_ch_parametric, round 12). The capped-set Aggregator is
         // the same value with O(n) state and no distinct expansion.
         nArgs(1)
         val n = intParam(0)

@@ -30,7 +30,8 @@ object Graft {
     // cast to TIMESTAMP under the session zone (Tables.scala), so a
     // consumer-built non-UTC session would silently shift every
     // events.ts value. CH's analog is the server timezone; this
-    // library's contract is UTC (same as all eight bundled mains).
+    // library's contract is UTC (the setting of Harness.session, which
+    // every bundled main uses).
     if (spark.conf.get("spark.sql.session.timeZone") != "UTC")
       spark.conf.set("spark.sql.session.timeZone", "UTC")
     // Function registrations are per-SESSION state that no statement

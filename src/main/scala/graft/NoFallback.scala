@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Codegen-fallback hunter: runs the ENTIRE probe battery plus every
   * declared `SparkEntry` query with `spark.sql.codegen.fallback=false`,
   * so any expression tree whose generated code fails to compile — and
@@ -21,21 +19,14 @@ object NoFallback {
   def main(argv: Array[String]): Unit = {
     val sfDir = argv.headOption.getOrElse("/root/testdata/sf0.001")
     val only: Set[String] = argv.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Tuned(SparkSession.builder())
-      .appName("graft-nofallback").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // two distinct fallback paths, both forced loud: wholeStage
-      // compile errors (codegen.fallback) AND the interpreted-object
-      // fallback inside UnsafeProjection/MutableProjection/Ordering
-      // (factoryMode — the one that produced r14's silent
-      // "Expr codegen error and falling back to interpreter mode" WARN)
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // two distinct fallback paths, both forced loud: wholeStage
+    // compile errors (codegen.fallback) AND the interpreted-object
+    // fallback inside UnsafeProjection/MutableProjection/Ordering
+    // (factoryMode — the one that produced r14's silent
+    // "Expr codegen error and falling back to interpreter mode" WARN)
+    val spark = Harness.session(
+      "spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
     // single-offender mode keeps WARN+ so the CodeGenerator dumps the
     // failing generated code; the full sweep stays quiet
     spark.sparkContext.setLogLevel(if (argv.length > 1) "WARN" else "ERROR")

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Scratch battery: realistic ClickHouse query texts thrown at the
+/** Probe battery: realistic ClickHouse query texts thrown at the
   * front door to find remaining dialect gaps. Not part of the driver
-  * contract; run with `runMain graft.Probe <sfDir>`.
+  * contract; ProbeBatterySpec runs it on every `sbt test` and
+  * NoFallback sweeps it for codegen fallbacks.
   */
 object Probe {
   /** The 9 intentional loud-fail probes → the message substrings that
@@ -1285,31 +1284,4 @@ object Probe {
     "w46_json_introspection" ->
       "SELECT arrayStringConcat(distinctJSONPaths(props), ',') AS paths, arrayStringConcat(distinctDynamicTypes(parse_json(props)), ',') AS types FROM events"
   )
-
-  def main(argv: Array[String]): Unit = {
-    val sfDir = argv.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = Tuned(SparkSession.builder())
-      .appName("graft-probe").master(s"local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Graft.init(spark, sfDir)
-    var pass, fail = 0
-    queries.foreach { case (name, q) =>
-      try {
-        val rows = Graft.sql(spark, q).collect()
-        println(s"PROBE-OK   $name rows=${rows.length} :: ${rows.take(2).mkString(" | ")}")
-        pass += 1
-      } catch {
-        case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.toString)
-            .linesIterator.take(3).mkString(" ~ ")
-          println(s"PROBE-FAIL $name :: ${e.getClass.getSimpleName}: $msg")
-          fail += 1
-      }
-    }
-    println(s"PROBE-DONE pass=$pass fail=$fail")
-    spark.stop()
-  }
 }

@@ -100,7 +100,7 @@ object Stress {
   // "Exchange" regex this replaced (pre-r15) re-counted a cached
   // lineage at every reference, so persisting MORE (the r15 bm25/
   // lang_id stage-sharing) paradoxically printed as more exchanges
-  private def exchanges(df: DataFrame): Int = Perf.executedExchanges(df)
+  private def exchanges(df: DataFrame): Int = Explain.executedExchanges(df)
 
   private def report(family: String, mult: Int, rows: Long, sec: Double,
                      ex: Int, out: Long): Unit =
@@ -110,12 +110,7 @@ object Stress {
 
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = Tuned(SparkSession.builder())
-      .appName(s"graft-stress-${mult}x").master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     // Text.hashPairsFast resolves graft's xx_hash64 by name
@@ -721,8 +716,10 @@ object Stress {
     // (the at-scale state backend the recovery spec already covers).
     val sdir = java.nio.file.Files
       .createTempDirectory("graft_stress_stream").toString
+    // 32 files at any parallelism: the trigger ladder below counts
+    // micro-batches of them
     events.select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .write.mode("overwrite").parquet(sdir)
+      .repartition(32).write.mode("overwrite").parquet(sdir)
     val sschema = spark.read.parquet(sdir).schema
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     def streamLeg(family: String, filesPerTrigger: Int,
@@ -741,9 +738,9 @@ object Stress {
       } finally if (rocksDb) spark.conf.unset(provKey)
     }
     // r17 (verdict task 8): locate the micro-batch-size KNEE. The
-    // replay directory holds exactly 32 files (range → 32 partitions),
-    // so the trigger ladder is really a BATCH-COUNT ladder: 8 files =
-    // 4 micro-batches, 16 = 2, 64 = 1 (and a "256-file" rung would be
+    // replay directory holds exactly 32 files, so the trigger ladder
+    // is really a BATCH-COUNT ladder: 8 files = 4 micro-batches,
+    // 16 = 2, 64 = 1 (and a "256-file" rung would be
     // IDENTICAL to 64 — the stretch task's literal spelling is vacuous
     // here; the knee is what it was after). Fewer, larger batches pay
     // less per-batch state load/commit; where the curve flattens is

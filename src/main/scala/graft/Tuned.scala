@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** r20 session tuning shared by every bundled main (Bench, Verify,
-  * Lab, Explain, NoFallback, Stress, Perf, Probe). Purely PHYSICAL
+  * Lab, Explain, NoFallback, Stress — through [[Harness.session]]) and
+  * by perfbench. Purely PHYSICAL
   * settings — none of them can change a query's rows, only its
   * schedule — measured on the full 372-query bench (OPTIMIZATION_r20):
   *

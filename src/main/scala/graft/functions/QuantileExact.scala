@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * point of this aggregate. Spark's built-in `Percentile` keeps an
   * `OpenHashMap[AnyRef, Long]` and pays a box + hash probe per row
   * (measured ~0.4 s per aggregate over 150k single-partition rows,
-  * PERF.md `sql_ch_parametric`); ClickHouse's quantileExact keeps the
+  * round 12, `sql_ch_parametric`); ClickHouse's quantileExact keeps the
   * raw value vector [public docs: aggregate-functions/reference/
   * quantileexact — "memory consumption O(n)"]. This is that vector:
   * primitive append (~ns), amortized doubling, one sort in finish.

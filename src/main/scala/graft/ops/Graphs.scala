@@ -79,13 +79,21 @@ object Graphs {
     * one up, so the list is a FIFO that unpersists the eldest beyond 8
     * live results; lineage stays intact, so a long-retained result
     * frame consumed after eviction recomputes instead of erroring.
+    * Each eviction logs one WARN, since that recompute is silent and
+    * costly.
     */
   private final class Pins[T](unpersist: T => Unit) {
     private val q = new java.util.ArrayDeque[T]()
     def add(t: T): Unit = q.synchronized {
       q.addLast(t); if (q.size > 8) Some(q.pollFirst()) else None
-    }.foreach(unpersist)
+    }.foreach { old =>
+      log.warn("Graphs: more than 8 connected-components results are " +
+        "live; unpersisting the oldest. A retained result of that call " +
+        "that is consumed later recomputes every propagation round.")
+      unpersist(old)
+    }
   }
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private val pinnedRdds = new Pins[org.apache.spark.rdd.RDD[_]](_.unpersist(false))
   private def registerResult(r: org.apache.spark.rdd.RDD[_]): Unit = pinnedRdds.add(r)
   /** Same convention for the generic (non-Long) paths' persisted

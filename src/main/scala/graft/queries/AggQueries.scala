@@ -72,7 +72,7 @@ object AggQueries {
       // graft_quantile_exact: primitive-vector state with the
       // builtin's EXACT interpolation arithmetic — hash-identical
       // results, ~2× faster than `percentile`'s boxed OpenHashMap on
-      // this 600k-row shape (PERF.md)
+      // this 600k-row shape (round 12)
       graft.functions.GraftFunctions.register(s)
       Tables(s, dir, "lineitem")
         .groupBy($"l_returnflag")

@@ -124,4 +124,35 @@ class GraphsSpec extends AnyFunSuite {
     val out = Graphs.connectedComponents(edges.toDF("a", "b"), "a", "b", maxIter = 2)
     assert(out.count() == 10)
   }
+
+  test("each eviction from the 8 result pins logs one WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val logger = LogManager.getLogger(Graphs.getClass.getName).asInstanceOf[Logger]
+    val warns = new java.util.concurrent.atomic.AtomicInteger()
+    val appender = new AbstractAppender("graphs-pins", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN &&
+            e.getMessage.getFormattedMessage.contains("recomputes every propagation round"))
+          warns.incrementAndGet()
+    }
+    appender.start()
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try {
+      // nine live results overflow the 8 pins whatever other suites left
+      (1 to 9).foreach(i => run(Seq((i.toLong, i + 100L))))
+      val afterFull = warns.get()
+      assert(afterFull >= 1)
+      run(Seq((1L, 2L)))
+      assert(warns.get() == afterFull + 1)
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+  }
 }

@@ -45,9 +45,9 @@ class PartitionPruneSpec extends AnyFunSuite {
     val rows = q.collect()
     assert(rows.nonEmpty)
 
-    // AQE nests query stages — Perf.executedNodes is the repo's
+    // AQE nests query stages — Explain.executedNodes is the repo's
     // stage-crossing traversal (same one the plan audits use)
-    val nodes = Perf.executedNodes(q.queryExecution.executedPlan)
+    val nodes = Explain.executedNodes(q.queryExecution.executedPlan)
     val scans = nodes.collect { case f: FileSourceScanExec => f }
     assert(scans.size == 1, s"expected one file scan, got ${scans.size}; " +
       s"nodes: ${nodes.map(_.getClass.getSimpleName).mkString(", ")}")

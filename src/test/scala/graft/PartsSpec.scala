@@ -126,7 +126,7 @@ class PartsSpec extends AnyFunSuite {
     assert(row.getLong(0) == 20L)
     assert(row.getLong(1) == (0L until 40L).filter(_ % 4 == 1).map(n => 2 * n + 100).sum)
     // one scan per part, each pruned to its own g=1 files
-    val scans = Perf.executedNodes(q.queryExecution.executedPlan)
+    val scans = Explain.executedNodes(q.queryExecution.executedPlan)
       .collect { case f: FileSourceScanExec => f }
     assert(scans.size == 2 && scans.forall(_.partitionFilters.nonEmpty))
     val files = spark.table("parts_p").inputFiles.toSeq
