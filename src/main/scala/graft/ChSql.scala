@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.ops.Relational
 import graft.plans.LimitByPlan
 
+import scala.collection.concurrent.TrieMap
 import scala.util.matching.Regex
 
 /** Clause-level ClickHouse SQL: the clauses Spark's parser has no
@@ -260,18 +261,23 @@ object ChSql {
     """(?i)\bFROM\s+([A-Za-z_]\w*)\s+SAMPLE\s+(\d+(?:\.\d+)?(?:\s*/\s*\d+(?:\.\d+)?)?)(?:\s+OFFSET\s+(\d+(?:\.\d+)?(?:\s*/\s*\d+(?:\.\d+)?)?))?""".r
 
   /** CH declares the sampling key in the table's DDL (`SAMPLE BY
-    * intHash32(key)`); the fixture tables' natural keys stand in.
-    * Extend via [[registerSampleKey]] for user tables.
+    * intHash32(key)`); a table without one falls back to these fixture
+    * tables' natural keys. Extend via [[registerSampleKey]].
     */
-  private val sampleKeys = scala.collection.concurrent.TrieMap(
+  private val fixtureSampleKeys = Map(
     "region" -> "r_regionkey", "nation" -> "n_nationkey",
     "customer" -> "c_custkey", "supplier" -> "s_suppkey",
     "part" -> "p_partkey", "orders" -> "o_orderkey",
     "lineitem" -> "l_orderkey", "events" -> "event_id",
     "documents" -> "doc_id", "embeddings" -> "vec_id")
 
-  def registerSampleKey(table: String, key: String): Unit =
-    sampleKeys.put(table.toLowerCase(java.util.Locale.ROOT), key)
+  /** Sets `table`'s sampling key in `spark`'s table catalog. */
+  def registerSampleKey(spark: SparkSession, table: String, key: String): Unit =
+    updateTable(spark, table)(_.copy(sampleKey = Some(key)))
+
+  private def sampleKeyOf(spark: SparkSession, table: String): Option[String] =
+    tableMeta(spark, table).flatMap(_.sampleKey)
+      .orElse(fixtureSampleKeys.get(tableKey(table)))
 
   /** Above this n, absolute `SAMPLE n` switches from the exact-n
     * top-k path (TakeOrdered — driver-side merge proportional to n,
@@ -309,8 +315,8 @@ object ChSql {
     attrs: Map[String, (DataType,
       org.apache.spark.sql.catalyst.expressions.Literal)])
 
-  private[graft] val dictionaries =
-    scala.collection.concurrent.TrieMap[String, DictSpec]()
+  private[graft] def dictionaries(spark: SparkSession): TrieMap[String, DictSpec] =
+    SessionCache(spark).slot("chsql.dictionaries")(TrieMap.empty[String, DictSpec])
 
   private val dictCap = 1000000
 
@@ -355,7 +361,7 @@ object ChSql {
       val lookup = rows.iterator.map(r => r.get(0) -> r.get(i + 1)).toMap
       aName -> (aType, Literal.create(lookup, MapType(keyType, aType)))
     }.toMap
-    dictionaries.put(name, DictSpec(src, keyCol, keyType, keysLit, attrs))
+    dictionaries(spark).put(name, DictSpec(src, keyCol, keyType, keysLit, attrs))
     import spark.implicits._
     Seq((name, src, rows.length)).toDF("dictionary", "source", "entries")
   }
@@ -365,7 +371,7 @@ object ChSql {
     case Array(num, den) => num.trim.toDouble / den.trim.toDouble
   }
 
-  private def rewriteSample(q: String): String =
+  private def rewriteSample(spark: SparkSession, q: String): String =
     maskedReplaceAll(q, sampleRe) { m =>
       val table = m.group(1)
       val fTxt = m.group(2).trim
@@ -375,13 +381,15 @@ object ChSql {
       // rows (TakeOrdered on the sampling hash, key tiebreak) —
       // exactly n rows, identical at any parallelism, and the same
       // subset CH's hash-range sampling converges toward.
-      val key = sampleKeys.getOrElse(table.toLowerCase(java.util.Locale.ROOT),
+      val key = sampleKeyOf(spark, table).getOrElse(
         throw new IllegalArgumentException(
           s"no sampling key registered for table '$table' — ChSql.registerSampleKey first"))
+      // Text.mh60(lit("smp"), key) spelled in SQL — identical bits to
+      // rel_sample_hash's oracle-proven predicate.
+      val h2 = s"CAST(conv(substring(md5(concat('smp|', " +
+        s"CAST($key AS STRING))), 1, 15), 16, 10) AS BIGINT)"
       if (m.group(3) == null && fTxt.matches("\\d+") && fTxt.toLong > 1) {
         val n = fTxt.toLong
-        val h2 = s"CAST(conv(substring(md5(concat('smp|', " +
-          s"CAST($key AS STRING))), 1, 15), 16, 10) AS BIGINT)"
         if (n > sampleNApproxThreshold) {
           // large n: hash-threshold filter (see sampleNApproxThreshold)
           // — 2^60 = full span of the 15-hex-digit hash. The double
@@ -407,10 +415,7 @@ object ChSql {
           s"SAMPLE OFFSET window [$off, ${off + f}) must fit in [0, 1)")
         val lo = math.round(off * 1000000d)
         val hi = math.round((off + f) * 1000000d)
-        // Text.mh60(lit("smp"), key) spelled in SQL — identical bits to
-        // rel_sample_hash's oracle-proven predicate.
-        val h = s"CAST(conv(substring(md5(concat('smp|', CAST($key AS STRING))), 1, 15), 16, 10) AS BIGINT)" +
-          s" % 1000000"
+        val h = s"$h2 % 1000000"
         val pred = if (lo == 0L) s"$h < $hi" else s"$h >= $lo AND $h < $hi"
         Regex.quoteReplacement(
           s"FROM (SELECT * FROM $table WHERE $pred) $table")
@@ -854,8 +859,7 @@ object ChSql {
     }
     if (queryLogRe.findFirstIn(q).isDefined) {
       import spark.implicits._
-      import scala.jdk.CollectionConverters._
-      queryLog.iterator().asScala.toSeq
+      queryLog(spark).rows
         .map { case (id, ms, text) =>
           (id, new java.sql.Timestamp(ms), text) }
         .toDF("query_id", "event_time", "query")
@@ -1793,21 +1797,21 @@ object ChSql {
   // before the query sees rows. The engine key metadata doesn't exist
   // on a bare view, so — like sampling keys — it's registered
   // explicitly; unregistered tables fail loudly toward the operators.
-  private val finalSpecs =
-    scala.collection.concurrent.TrieMap[String, DataFrame => DataFrame]()
 
-  def registerFinal(table: String, collapse: DataFrame => DataFrame): Unit =
-    finalSpecs.put(table.toLowerCase(java.util.Locale.ROOT), collapse)
+  /** Sets `table`'s FINAL collapse in `spark`'s table catalog. */
+  def registerFinal(spark: SparkSession, table: String,
+      collapse: DataFrame => DataFrame): Unit =
+    updateTable(spark, table)(_.copy(collapse = Some(collapse)))
 
   private val fromFinalRe = """(?i)\bFROM\s+([A-Za-z_]\w*)\s+FINAL\b""".r
 
   private def rewriteFinal(spark: SparkSession, q: String): String =
     maskedReplaceAll(q, fromFinalRe) { m =>
       val t = m.group(1)
-      val fn = finalSpecs.getOrElse(t.toLowerCase(java.util.Locale.ROOT),
+      val fn = tableMeta(spark, t).flatMap(_.collapse).getOrElse(
         throw new IllegalArgumentException(
           s"FROM $t FINAL needs engine key metadata — " +
-            s"""ChSql.registerFinal("$t", df => …) first (e.g. """ +
+            s"""ChSql.registerFinal(spark, "$t", df => …) first (e.g. """ +
             "Relational.replacingLatest / versionedCollapseFinal)"))
       val v = s"graft_final_${sysSeq.incrementAndGet()}"
       fn(spark.table(t)).createOrReplaceTempView(v)
@@ -2164,20 +2168,21 @@ object ChSql {
         nArgs(1)
         s"reverse(slice(reverse(array_sort(collect_list(${args.head})$filt)), " +
           s"1, ${intParam(0)}))"
-      case "largesttrianglethreebuckets" =>
+      case "largesttrianglethreebuckets" | "lttb" =>
         // largestTriangleThreeBuckets(n)(x, y) → the collected-state
         // LTTB UDAF (ops/Aggregates.Lttb): classic mean-anchor
         // downsampling over the group's sorted series, array of (x, y)
         // tuples out [CH docs: aggregate-functions/reference/
         // largestTriangleThreeBuckets]; capped at 2^24 points/group
-        // with loud guidance toward the relational agg_lttb form.
+        // with loud guidance toward the relational agg_lttb form. The
+        // UDAF sorts in finish(), so the result is executor-count
+        // independent.
         require(params.size == 1, s"$name0 takes the bucket-count parameter")
-        require(filt.isEmpty, s"${name0}If is not supported")
         nArgs(2)
         val nb = intParam(0)
         val fn = s"__ch_lttb_$nb"
         registerOnce(spark, fn)(udaf(new Aggregates.Lttb(nb)))
-        s"$fn(CAST(${args(0)} AS DOUBLE), CAST(${args(1)} AS DOUBLE))"
+        s"$fn(CAST(${args(0)} AS DOUBLE), CAST(${args(1)} AS DOUBLE))$filt"
       case "mannwhitneyutest" =>
         // mannWhitneyUTest(['alternative'[, continuity]])(sample, idx)
         // → the collected-state UDAF (ops/Aggregates.MannWhitneyU);
@@ -2290,18 +2295,6 @@ object ChSql {
         s"element_at(transform(array($pairs), __ps -> " +
           s"element_at(transform(array(array_max(transform(__ps, " +
           s"__r -> __r.t))), __m -> $fold), 1)), 1)"
-      case "largesttrianglethreebuckets" | "lttb" =>
-        // classic sequential LTTB [Steinarsson 2013, public thesis]
-        // over the x-sorted collected series — the on-demand UDAF
-        // sorts in finish(), so the result is executor-count
-        // independent; the relational mean-anchor variant (agg_lttb)
-        // remains the unbounded-series scale path.
-        require(params.size == 1, s"$name0 takes the bucket-count parameter")
-        nArgs(2)
-        val nb = intParam(0)
-        val fn = s"__ch_lttb_$nb"
-        registerOnce(spark, fn)(udaf(new Aggregates.Lttb(nb)))
-        s"$fn(CAST(${args(0)} AS DOUBLE), CAST(${args(1)} AS DOUBLE))$filt"
       case "grouparrayinsertat" =>
         // groupArrayInsertAt(default, size)(x, pos): fixed-size array
         // with x at position pos (0-based), default elsewhere. CH
@@ -2738,7 +2731,7 @@ object ChSql {
       m => if (mask(m.start)) Regex.quoteReplacement(m.matched) else f(m))
   }
 
-  private def preRewrite(q0: String): String = {
+  private def preRewrite(spark: SparkSession, q0: String): String = {
     var q = rewriteTopN(rewriteScalarWith(rewriteFetch(q0)))
     lastTopLevel(q, formatRe).foreach(m => q = q.substring(0, m.start))
     require(firstTopLevel(q, anyJoinRe).isEmpty,
@@ -2752,7 +2745,7 @@ object ChSql {
       m => Regex.quoteReplacement(s"GROUP BY GROUPING SETS ((${m.group(1)}), ())"))
     val c = maskedReplaceAll(b, commaLimitRe)(
       m => s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
-    rewriteSample(c)
+    rewriteSample(spark, c)
   }
 
   // ---- DataFrame-level clause extraction ---------------------------
@@ -2817,7 +2810,6 @@ object ChSql {
   private val onKwRe = """(?i)\bON\b""".r
   private val usingKwRe = """(?i)\bUSING\b""".r
   private val andKwRe = """(?i)\bAND\b""".r
-  private val anyJoinKwRe = """(?i)\bJOIN\b""".r
 
   /** Where the ON condition list of a routed join ends: the next
     * top-level clause keyword, set operator, or follow-on join.
@@ -3144,7 +3136,7 @@ object ChSql {
 
   /** Points `table`'s view at `out`, dropping its skip index. */
   private def repoint(table: String, out: DataFrame): DataFrame = {
-    invalidateIndex(table)
+    invalidateIndex(out.sparkSession, table)
     out.createOrReplaceTempView(table)
     out
   }
@@ -3330,6 +3322,40 @@ object ChSql {
     repoint(table, writePart(out, table, "ddl", partCols(df, out)))
   }
 
+  // ---- table catalog -----------------------------------------------
+
+  /** What graft knows of a table beyond its view, one record per table
+    * in the session's catalog, as CH keeps one metadata object per
+    * table: CREATE writes it, RENAME moves it, DROP removes it. It
+    * holds a front-door table's verbatim CREATE, the FINAL collapse,
+    * the sampling key, the skip index (manifest dir, column, type),
+    * the column DEFAULTs and an MV's (source table, query text).
+    */
+  private final case class TableMeta(
+      ddl: Option[String] = None,
+      collapse: Option[DataFrame => DataFrame] = None,
+      sampleKey: Option[String] = None,
+      skipIndex: Option[(String, String, String)] = None,
+      defaults: Map[String, String] = Map.empty,
+      mvSource: Option[(String, String)] = None) {
+    def created: Boolean = ddl.isDefined || mvSource.isDefined
+  }
+
+  // case-insensitive, as Spark's temp view names are
+  private def tableKey(table: String) = table.toLowerCase(java.util.Locale.ROOT)
+
+  private def tables(spark: SparkSession): TrieMap[String, TableMeta] =
+    SessionCache(spark).slot("chsql.tables")(TrieMap.empty[String, TableMeta])
+
+  private def tableMeta(spark: SparkSession, table: String): Option[TableMeta] =
+    tables(spark).get(tableKey(table))
+
+  /** Applies `f` to `table`'s record; an empty result drops it. */
+  private def updateTable(spark: SparkSession, table: String)(
+      f: TableMeta => TableMeta): Unit =
+    tables(spark).updateWith(tableKey(table))(m =>
+      Some(f(m.getOrElse(TableMeta()))).filter(_ != TableMeta()))
+
   // ---- CH CTAS: CREATE TABLE t ENGINE = … AS SELECT ----------------
 
   private val createTableRe =
@@ -3350,10 +3376,6 @@ object ChSql {
   private val colDefRe =
     """(?is)^([A-Za-z_]\w*)\s+(.+?)(?:\s+(?:DEFAULT|MATERIALIZED)\s+(.+))?$""".r
 
-  /** table → (column → DEFAULT expression text). */
-  private val ctasDefaults =
-    scala.collection.concurrent.TrieMap[String, Map[String, String]]()
-
   private def runCreateEmptyTable(spark: SparkSession,
       m: Regex.Match): DataFrame = {
     val (name, colsRaw, engineTail) = (m.group(1), m.group(2), m.group(3))
@@ -3367,9 +3389,11 @@ object ChSql {
     }.mkString(", ")
     val defaults = defs.flatMap(cm =>
       Option(cm.group(3)).map(e => cm.group(1) -> e.trim)).toMap
-    if (defaults.nonEmpty) ctasDefaults(name) = defaults
-    run(spark, s"CREATE TABLE $name ENGINE = $engineTail AS " +
-      s"SELECT $selectCols FROM system.one WHERE false")
+    val ctas = createTableRe.findFirstMatchIn(
+      s"CREATE TABLE $name ENGINE = $engineTail AS " +
+        s"SELECT $selectCols FROM system.one WHERE false").getOrElse(
+      throw new IllegalArgumentException(s"cannot parse ENGINE = $engineTail"))
+    runCreateTable(spark, ctas, m.matched.trim, defaults)
   }
   private val orderByClauseRe =
     """(?is)\bORDER\s+BY\s+(\([^)]*\)|[A-Za-z_][\w.]*(?:\s*,\s*[A-Za-z_][\w.]*)*)""".r
@@ -3400,7 +3424,8 @@ object ChSql {
     *   - CollapsingMergeTree(sign) / VersionedCollapsingMergeTree
     *     (sign, ver): net-positive (key[, version]) survivors.
     */
-  private def runCreateTable(spark: SparkSession, m: Regex.Match): DataFrame = {
+  private def runCreateTable(spark: SparkSession, m: Regex.Match,
+      ddl: String, defaults: Map[String, String]): DataFrame = {
     val (name, engine, engineArgsRaw, clauses0, select) =
       (m.group(1), m.group(2), Option(m.group(3)).getOrElse(""),
         m.group(4), m.group(5))
@@ -3447,16 +3472,9 @@ object ChSql {
       }
 
     val snap = repoint(name, writePart(df, name, "ctas", partCol.toSeq))
-    ctasTables.add(name)
-    ctasDdl(name) = m.matched.trim
-
-    sampleKey.foreach(k => registerSampleKey(name, k))
-    (ttlCollapse, engineCollapse) match {
-      case (Some(t), Some(e)) => registerFinal(name, d => e(t(d)))
-      case (Some(t), None) => registerFinal(name, t)
-      case (None, Some(e)) => registerFinal(name, e)
-      case (None, None) => ()
-    }
+    val collapse = (ttlCollapse ++ engineCollapse).reduceOption(_ andThen _)
+    tables(spark).put(tableKey(name),
+      TableMeta(Some(ddl), collapse, sampleKey, defaults = defaults))
     snap
   }
 
@@ -3517,10 +3535,6 @@ object ChSql {
   private val dropIndexRe =
     """(?is)^\s*ALTER\s+TABLE\s+([A-Za-z_]\w*)\s+DROP\s+INDEX\s+([A-Za-z_]\w*)\s*$""".r
 
-  /** table → (manifest dir, indexed column, type). */
-  private val skipIndexes =
-    scala.collection.concurrent.TrieMap[String, (String, String, String)]()
-
   /** how many queries routed through a skip index (observable for tests). */
   private[graft] val indexRoutedCount = new java.util.concurrent.atomic.AtomicLong()
 
@@ -3530,8 +3544,8 @@ object ChSql {
     * and routing through it would resurrect pre-mutation rows.
     * Re-run ADD INDEX after mutating to reindex.
     */
-  private def invalidateIndex(table: String): Unit =
-    skipIndexes.remove(table.toLowerCase(java.util.Locale.ROOT))
+  private def invalidateIndex(spark: SparkSession, table: String): Unit =
+    updateTable(spark, table)(_.copy(skipIndex = None))
 
   /** `ALTER TABLE t ADD INDEX idx col TYPE minmax|set|bloom_filter
     * [GRANULARITY g]` → [[graft.ops.SkipIndex]]: the table rewrites
@@ -3554,9 +3568,8 @@ object ChSql {
     else graft.ops.SkipIndex.build(df, dest, col0, parts)
     graft.ops.Mutations.readParts(spark, Seq(s"$dest/data"), df.schema, partitioned = false)
       .createOrReplaceTempView(table)
-    skipIndexes.put(table.toLowerCase(java.util.Locale.ROOT), (dest, col0, typ))
-    import spark.implicits._
-    Seq(s"$table.${m.group(2)}").toDF("added_index")
+    updateTable(spark, table)(_.copy(skipIndex = Some((dest, col0, typ))))
+    one(spark, "added_index", s"$table.${m.group(2)}")
   }
 
   /** Transparent index read path, deliberately conservative: fires
@@ -3569,14 +3582,14 @@ object ChSql {
     * outside that shape runs the normal full scan.
     */
   private def rewriteIndexScan(spark: SparkSession, q: String): String = {
-    if (skipIndexes.isEmpty) return q
+    val indexed = tables(spark).iterator.flatMap { case (t, m) => m.skipIndex.map(t -> _) }.toMap
+    if (indexed.isEmpty) return q
     val mask = topLevelMask(q)
     val fromRe = """(?i)\bFROM\s+([A-Za-z_]\w*)(\s*(,|JOIN|ASOF|ANY)\b)?""".r
     val froms = fromRe.findAllMatchIn(q).filter(m => mask(m.start)).toList
     froms match {
       case m :: Nil if m.group(2) == null =>
-        val table = m.group(1).toLowerCase(java.util.Locale.ROOT)
-        skipIndexes.get(table) match {
+        indexed.get(tableKey(m.group(1))) match {
           case Some((dest, col0, typ)) =>
             val eqRe = ("""(?i)\b""" + java.util.regex.Pattern.quote(col0) +
               """\s*=\s*('(?:[^'])*'|-?\d+(?:\.\d+)?)""").r
@@ -3660,7 +3673,7 @@ object ChSql {
     // omitted columns take their registered DEFAULT (which may
     // reference the provided columns, CH-style) or NULL
     val have = named.columns.toSet
-    val defaults = ctasDefaults.getOrElse(table, Map.empty)
+    val defaults = tableMeta(spark, table).fold(Map.empty[String, String])(_.defaults)
     val add = cur.schema.fields.filterNot(f => have.contains(f.name))
       .foldLeft(named) { (d, f) =>
         val e = defaults.get(f.name).map(expr).getOrElse(lit(null))
@@ -3686,18 +3699,6 @@ object ChSql {
   private val createMvRe =
     """(?is)^\s*CREATE\s+MATERIALIZED\s+VIEW\s+([A-Za-z_]\w*)(\s+POPULATE)?\s+AS\s+((?:SELECT|WITH)\b.*)$""".r
   private val dropTableRe = """(?is)^\s*DROP\s+TABLE\s+([A-Za-z_]\w*)\s*$""".r
-  /** mv name → (source table, MV query text). */
-  private val mvRegistry =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
-
-  /** tables created by `CREATE TABLE … ENGINE = … AS SELECT`. */
-  private val ctasTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** verbatim CREATE statements, for SHOW CREATE TABLE. */
-  private val ctasDdl =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Spark → ClickHouse type spellings (the inverse of [[chType]]),
     * for synthesizing SHOW CREATE TABLE on tables that were not
     * created through the front door (fixture views).
@@ -3738,7 +3739,9 @@ object ChSql {
     */
   private def fireMaterializedViews(spark: SparkSession, table: String,
       block: DataFrame): Unit =
-    mvRegistry.toSeq.filter(_._2._1 == table).foreach { case (mv, (_, qtext)) =>
+    tables(spark).toSeq.flatMap { case (mv, m) =>
+      m.mvSource.collect { case (src, q) if tableKey(src) == tableKey(table) => (mv, q) }
+    }.foreach { case (mv, qtext) =>
       val blockView = s"graft_mv_block_${mutationSeq.incrementAndGet()}"
       block.createOrReplaceTempView(blockView)
       val rebound = qtext.replaceAll("(?i)\\bFROM\\s+" + table + "\\b",
@@ -3785,19 +3788,23 @@ object ChSql {
   private val dropCacheRe =
     """(?is)^\s*SYSTEM\s+DROP\s+QUERY\s+CACHE\s*$""".r
   /** CH system.query_log analog: a bounded ring of the session's
-    * front-door queries (id, epoch-ms event time, verbatim text).
-    * Driver-side metadata only — never row data.
+    * front-door queries (id, epoch-ms event time, verbatim text), ids
+    * counted per session. Driver-side metadata only — never row data.
     */
-  private val queryLog =
-    new java.util.concurrent.ConcurrentLinkedDeque[(Long, Long, String)]()
-  private val queryLogCap = 1000
-  private val queryLogSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  private def logQuery(q: String): Unit = {
-    queryLog.addLast((queryLogSeq.incrementAndGet(),
-      System.currentTimeMillis(), q))
-    while (queryLog.size > queryLogCap) queryLog.pollFirst()
+  private final class QueryLog {
+    private val ring = new java.util.ArrayDeque[(Long, Long, String)]()
+    private var seq = 0L
+    def add(q: String): Unit = synchronized {
+      seq += 1
+      ring.addLast((seq, System.currentTimeMillis(), q))
+      if (ring.size > 1000) ring.pollFirst()
+    }
+    def rows: List[(Long, Long, String)] =
+      synchronized(ring.toArray(new Array[(Long, Long, String)](0)).toList)
   }
+
+  private def queryLog(spark: SparkSession): QueryLog =
+    SessionCache(spark).slot("chsql.query_log")(new QueryLog)
 
   private val setStatementRe =
     """(?is)^\s*SET\s+(\w+)\s*=\s*(.+?)\s*$""".r
@@ -3912,22 +3919,26 @@ object ChSql {
       })
   }
 
+  /** A statement's one-row, one-column result. */
+  private def one(spark: SparkSession, col: String, v: String): DataFrame = {
+    import spark.implicits._
+    Seq(v).toDF(col)
+  }
+
   def run(spark: SparkSession, query0: String): DataFrame = {
     val query = rewriteQueryParams(spark, stripLineComments(query0))
     // log before routing (CH logs failed queries too); the log itself
     // is excluded so SELECTs over it don't self-append recursively
-    if (!queryLogRe.findFirstIn(query).isDefined) logQuery(query0)
+    if (!queryLogRe.findFirstIn(query).isDefined) queryLog(spark).add(query0)
     dropCacheRe.findFirstMatchIn(query).foreach { _ =>
       SessionCache(spark).drop("query")
-      import spark.implicits._
-      return Seq("query cache dropped").toDF("status")
+      return one(spark, "status", "query cache dropped")
     }
     setStatementRe.findFirstMatchIn(query).foreach { m =>
       applySetting(spark, m.group(1),
         m.group(2).trim.stripPrefix("'").stripSuffix("'"),
         sessionScoped = true)
-      import spark.implicits._
-      return Seq(m.group(1)).toDF("set")
+      return one(spark, "set", m.group(1))
     }
     val (queryNoSettings, settings) = peelSettings(query)
     settings.foreach { case (k, v) =>
@@ -3949,13 +3960,11 @@ object ChSql {
         s"CREATE FUNCTION parameter '$a' must be an identifier"))
       graft.functions.ChDialect.createFunction(spark, m.group(1), args,
         m.group(4).trim)
-      import spark.implicits._
-      return Seq(m.group(1)).toDF("created")
+      return one(spark, "created", m.group(1))
     }
     dropFnRe.findFirstMatchIn(query).foreach { m =>
       graft.functions.ChDialect.dropFunction(spark, m.group(1))
-      import spark.implicits._
-      return Seq(m.group(1)).toDF("dropped")
+      return one(spark, "dropped", m.group(1))
     }
     explainRe.findFirstMatchIn(query).foreach { m =>
       val qe = run(spark, m.group(2)).queryExecution
@@ -3988,12 +3997,11 @@ object ChSql {
       return runCreateDictionary(spark, m)
     }
     dropDictRe.findFirstMatchIn(query).foreach { m =>
-      dictionaries.remove(m.group(1))
-      import spark.implicits._
-      return Seq(m.group(1)).toDF("dropped")
+      dictionaries(spark).remove(m.group(1))
+      return one(spark, "dropped", m.group(1))
     }
     createTableRe.findFirstMatchIn(query).foreach { m =>
-      return runCreateTable(spark, m)
+      return runCreateTable(spark, m, m.matched.trim, Map.empty)
     }
     createEmptyTableRe.findFirstMatchIn(query).foreach { m =>
       require(!"""(?is)\bAS\s+SELECT\b""".r.findFirstIn(m.group(3)).isDefined,
@@ -4007,8 +4015,7 @@ object ChSql {
     createViewRe.findFirstMatchIn(query).foreach { m =>
       val (name, body) = (m.group(1), m.group(2))
       run(spark, body).createOrReplaceTempView(name)
-      import spark.implicits._
-      return Seq(name).toDF("created_view")
+      return one(spark, "created_view", name)
     }
     existsTableRe.findFirstMatchIn(query).foreach { m =>
       import spark.implicits._
@@ -4030,7 +4037,8 @@ object ChSql {
     showCreateRe.findFirstMatchIn(query).foreach { m =>
       val name = m.group(1)
       import spark.implicits._
-      ctasDdl.get(name).foreach(d => return Seq(d).toDF("statement"))
+      tableMeta(spark, name).flatMap(_.ddl)
+        .foreach(d => return Seq(d).toDF("statement"))
       require(spark.catalog.tableExists(name),
         s"SHOW CREATE TABLE: no table '$name'")
       // not created through the front door: synthesize CH-spelled DDL
@@ -4053,19 +4061,9 @@ object ChSql {
       require(!spark.catalog.tableExists(b), s"RENAME TABLE: '$b' already exists")
       spark.table(a).createOrReplaceTempView(b)
       spark.catalog.dropTempView(a)
-      // carry engine metadata (FINAL collapse, sampling key, CTAS
-      // bookkeeping, MV registration) to the new name
-      val (al, bl) = (a.toLowerCase(java.util.Locale.ROOT),
-        b.toLowerCase(java.util.Locale.ROOT))
-      finalSpecs.remove(al).foreach(f => finalSpecs.put(bl, f))
-      sampleKeys.remove(al).foreach(k => sampleKeys.put(bl, k))
-      skipIndexes.remove(al).foreach(x => skipIndexes.put(bl, x))
-      if (ctasTables.remove(a)) ctasTables.add(b)
-      ctasDdl.remove(a).foreach(d => ctasDdl.put(b, d))
-      ctasDefaults.remove(a).foreach(d => ctasDefaults.put(b, d))
-      mvRegistry.remove(a).foreach(v => mvRegistry.put(b, v))
-      import spark.implicits._
-      return Seq(s"$a -> $b").toDF("renamed")
+      val moved = tables(spark).remove(tableKey(a)).getOrElse(TableMeta())
+      updateTable(spark, b)(_ => moved)
+      return one(spark, "renamed", s"$a -> $b")
     }
     createMvRe.findFirstMatchIn(query).foreach { m =>
       val (mv, qtext) = (m.group(1), m.group(3).trim)
@@ -4076,27 +4074,17 @@ object ChSql {
         if (m.group(2) != null) run(spark, qtext)
         else run(spark, qtext).limit(0)
       repoint(mv, writePart(initial, mv, "mv"))
-      mvRegistry(mv) = (base, qtext)
-      import spark.implicits._
-      return Seq(mv).toDF("created_mv")
+      tables(spark).put(tableKey(mv), TableMeta(mvSource = Some((base, qtext))))
+      return one(spark, "created_mv", mv)
     }
     dropTableRe.findFirstMatchIn(query).foreach { m =>
       val name = m.group(1)
-      val wasMv = mvRegistry.remove(name).isDefined
-      val wasCtas = ctasTables.remove(name)
-      require(wasMv || wasCtas,
+      require(tableMeta(spark, name).exists(_.created),
         s"DROP TABLE only manages MVs and CTAS tables here; '$name' is " +
           "neither — temp views drop via spark.catalog.dropTempView")
-      if (wasCtas) {
-        finalSpecs.remove(name.toLowerCase(java.util.Locale.ROOT))
-        sampleKeys.remove(name.toLowerCase(java.util.Locale.ROOT))
-        ctasDdl.remove(name)
-        ctasDefaults.remove(name)
-      }
-      skipIndexes.remove(name.toLowerCase(java.util.Locale.ROOT))
+      tables(spark).remove(tableKey(name))
       spark.catalog.dropTempView(name)
-      import spark.implicits._
-      return Seq(name).toDF("dropped")
+      return one(spark, "dropped", name)
     }
     addIndexRe.findFirstMatchIn(query).foreach { m =>
       return runAddIndex(spark, m)
@@ -4104,9 +4092,8 @@ object ChSql {
     dropIndexRe.findFirstMatchIn(query).foreach { m =>
       // reads fall back to the (still correct) full scan; the
       // reorganized data keeps serving the view
-      invalidateIndex(m.group(1))
-      import spark.implicits._
-      return Seq(s"${m.group(1)}.${m.group(2)}").toDF("dropped_index")
+      invalidateIndex(spark, m.group(1))
+      return one(spark, "dropped_index", s"${m.group(1)}.${m.group(2)}")
     }
     alterColRe.findFirstMatchIn(query).foreach { m =>
       return runAlterColumn(spark, m.group(1), m.group(2), m.group(3))
@@ -4149,7 +4136,7 @@ object ChSql {
       val isFinal = m.group(2) != null
       val collapse: DataFrame => DataFrame =
         if (!isFinal) identity
-        else finalSpecs.getOrElse(table.toLowerCase(java.util.Locale.ROOT),
+        else tableMeta(spark, table).flatMap(_.collapse).getOrElse(
           throw new IllegalArgumentException(
             "OPTIMIZE ... FINAL needs engine key metadata — CREATE TABLE " +
               "with a collapsing ENGINE (or registerFinal), or use " +
@@ -4180,12 +4167,11 @@ object ChSql {
           s"INTO OUTFILE FORMAT $other unsupported here " +
             "(CSV/CSVWithNames/TSV/JSONEachRow/Parquet)")
       }
-      import spark.implicits._
-      return Seq(path).toDF("outfile")
+      return one(spark, "outfile", path)
     }
 
     var q = registerCombinators(spark, rewriteIndexScan(spark,
-      preRewrite(rewriteSpecialJoins(spark, rewriteStarMods(spark,
+      preRewrite(spark, rewriteSpecialJoins(spark, rewriteStarMods(spark,
         rewriteChSubqueries(spark, rewriteFinal(spark,
           rewriteSystemTables(spark,
             rewriteParametric(spark,

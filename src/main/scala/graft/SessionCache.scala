@@ -14,8 +14,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *  - an access-order LRU of built values keyed by (kind, key), at most
   *    [[SessionCache.Cap]] entries in total; a dropped frame is
   *    unpersisted;
-  *  - the session's one-time registrations, never evicted, each marked
-  *    only after its block succeeds (a throw leaves a clean retry);
+  *  - never evicted: named values (the table catalog, query log,
+  *    dictionaries, projections, pinned results) and one-time
+  *    registrations, each marked only after its block succeeds;
   *  - the base directory for relative `file('…')` paths.
   * Sessions share no entry. A session's state is dropped when its
   * SparkContext stops, or earlier by [[SessionCache.release]].
@@ -38,7 +39,7 @@ final class SessionCache private () {
         this.size() > SessionCache.Cap && evicted.add((e.getKey, e.getValue))
     })
   private val buildCounts = new ConcurrentHashMap[String, AtomicLong]()
-  private val registered = ConcurrentHashMap.newKeySet[String]()
+  private val slots = new ConcurrentHashMap[String, AnyRef]()
 
   /** The analog of CH's `user_files_path`; `Graft.init` sets it. */
   @volatile private[graft] var dataDir: Option[String] = None
@@ -69,9 +70,15 @@ final class SessionCache private () {
     }.flatMap(SessionCache.frame).foreach(_.unpersist())
 
   def once(name: String)(register: => Unit): Unit =
-    if (!registered.contains(name)) registered.synchronized {
-      if (!registered.contains(name)) { register; registered.add(name) }
+    if (!slots.containsKey(name)) slots.synchronized {
+      if (!slots.containsKey(name)) { register; slots.put(name, name) }
     }
+
+  /** The session's one `name` value, made by `init` on first use and
+    * never evicted. An `AutoCloseable` value is closed by [[release]].
+    */
+  def slot[V <: AnyRef](name: String)(init: => V): V =
+    slots.computeIfAbsent(name, _ => init).asInstanceOf[V]
 
   private def frames: List[Dataset[_]] =
     lru.synchronized(lru.values.asScala.toList).flatMap(SessionCache.frame)
@@ -95,12 +102,16 @@ object SessionCache {
       }
     })
 
-  /** Frees `spark`'s state and unpersists its frames — except one whose
-    * plan another session of the context holds too, since Spark shares
-    * one cache entry between same-plan frames.
+  /** Frees `spark`'s state and closes its slots and frames — except a
+    * frame whose plan another session of the context holds too, since
+    * Spark shares one cache entry between same-plan frames.
     */
   def release(spark: SparkSession): Unit =
     Option(states.remove(spark)).foreach { gone =>
+      gone.slots.values.asScala.foreach {
+        case c: AutoCloseable => c.close()
+        case _ => ()
+      }
       val kept = states.asScala.toList.collect {
         case (s, c) if s.sparkContext eq spark.sparkContext => c.frames
       }.flatten.map(_.queryExecution.analyzed)

@@ -209,20 +209,30 @@ object ChDialect {
     * columns at the call site, like any SQL expression.
     */
   def createFunction(spark: SparkSession, name: String, argNames: Seq[String],
-      body: String): Unit = {
-    val template = spark.sessionState.sqlParser.parseExpression(body)
+      body: String): Unit = createMacro(spark, name, Seq(argNames -> body))
+
+  /** Registers `name` as a macro with one (parameters, body) template
+    * per arity: a call picks the template of its argument count and
+    * substitutes its argument trees for the parameters.
+    */
+  private def createMacro(spark: SparkSession, name: String,
+      variants: Seq[(Seq[String], String)]): Unit = {
+    val parsed = variants.map { case (an, b) =>
+      an -> spark.sessionState.sqlParser.parseExpression(b)
+    }
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, { c =>
-      require(c.size == argNames.size,
-        s"$name expects ${argNames.size} argument(s), got ${c.size}")
+      val (an, template) = parsed.find(_._1.size == c.size).getOrElse(
+        throw new IllegalArgumentException(s"$name expects " +
+          s"${parsed.map(_._1.size).mkString("/")} argument(s), got ${c.size}"))
       // inside lambda bodies the parser wraps EVERY identifier as
       // UnresolvedNamedLambdaVariable (it can't know which are
       // lambda parameters yet) — match both node shapes
       template.transformUp {
         case ua: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            if argNames.contains(ua.name) => c(argNames.indexOf(ua.name))
-        case lv: org.apache.spark.sql.catalyst.expressions.UnresolvedNamedLambdaVariable
-            if lv.nameParts.length == 1 && argNames.contains(lv.nameParts.head) =>
-          c(argNames.indexOf(lv.nameParts.head))
+            if an.contains(ua.name) => c(an.indexOf(ua.name))
+        case lv: UnresolvedNamedLambdaVariable
+            if lv.nameParts.length == 1 && an.contains(lv.nameParts.head) =>
+          c(an.indexOf(lv.nameParts.head))
       }
     }, "built-in")
   }
@@ -1048,10 +1058,8 @@ object ChDialect {
     // functions (codegen'd), no UDFs. `element_at(a,1)*0` is the
     // type-preserving zero (0 for int arrays, 0.0 for doubles), and
     // the empty-array guard avoids sequence(1,0)'s DESCENDING range.
-    def macroFn(name: String, argNames: Seq[String], body: String): Unit = {
-      guard(name, "macro")
-      createFunction(spark, name, argNames, body)
-    }
+    def macroFn(name: String, argNames: Seq[String], body: String): Unit =
+      macroFnN(name, argNames -> body)
     macroFn("arrayCumSum", Seq("__a"),
       """CASE WHEN size(__a) = 0 THEN __a ELSE
            transform(sequence(1, size(__a)),
@@ -1596,24 +1604,8 @@ object ChDialect {
     // arity-dispatching macro: one CH name, several (argNames, body)
     // templates — picks the variant matching the call's arg count
     def macroFnN(name: String, variants: (Seq[String], String)*): Unit = {
-      guard(name, "macroN")
-      val parsed = variants.map { case (an, b) =>
-        an -> spark.sessionState.sqlParser.parseExpression(b)
-      }
-      fr.createOrReplaceTempFunction(name, { c =>
-        parsed.find(_._1.size == c.size) match {
-          case Some((an, template)) => template.transformUp {
-            case ua: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-                if an.contains(ua.name) => c(an.indexOf(ua.name))
-            case lv: UnresolvedNamedLambdaVariable
-                if lv.nameParts.length == 1 && an.contains(lv.nameParts.head) =>
-              c(an.indexOf(lv.nameParts.head))
-          }
-          case None => throw new IllegalArgumentException(
-            s"$name: unsupported arity ${c.size} " +
-              s"(accepts ${parsed.map(_._1.size).mkString("/")})")
-        }
-      }, "built-in")
+      guard(name, "macro")
+      createMacro(spark, name, variants)
     }
     // mapPopulateSeries(keys, vals[, max]): fill integer key gaps from
     // min(keys) to max(keys) (or `max`) with type-zero values — the
@@ -2911,7 +2903,8 @@ object ChDialect {
     }
 
     // CH external dictionaries: the dictGet family resolves against
-    // CREATE DICTIONARY state (graft.ChSql.dictionaries). Lookups are
+    // the CREATE DICTIONARY state of the session analyzing the call
+    // (graft.ChSql.dictionaries of SparkSession.active). Lookups are
     // literal-map element_at — fully codegen'd, and the dictionary
     // ships with the serialized plan to every executor, the same
     // distribution model as CH's replicated in-RAM dictionaries.
@@ -2919,7 +2912,7 @@ object ChDialect {
     // non-Nullable contract); dictGetOrNull yields NULL.
     def dictSpec(e: Expression, fn: String): graft.ChSql.DictSpec = e match {
       case Literal(s, StringType) if s != null =>
-        graft.ChSql.dictionaries.getOrElse(s.toString,
+        graft.ChSql.dictionaries(SparkSession.active).getOrElse(s.toString,
           throw new IllegalArgumentException(
             s"$fn: unknown dictionary '$s' — CREATE DICTIONARY first"))
       case other => throw new IllegalArgumentException(

@@ -69,7 +69,7 @@ object H3Proj {
   /** Azimuth (radians) from each face center to its class-II i-axis —
     * column 0 of the published 20×3 azimuth table; columns 1/2 (j/k
     * axes) are exactly +2π/3 and +4π/3 ... the published table is
-    * spaced that way, which is the derivation used in [[axisAz]].
+    * spaced that way.
     */
   private[functions] val faceAxesAzCII: Array[Double] = Array(
     5.619958268523939882, // 0
@@ -468,9 +468,6 @@ object H3Proj {
       }
     }
   }
-
-  private def axisAz(face: Int, axis: Int): Double =
-    posAngle(faceAxesAzCII(face) + axis * 2.0 * math.Pi / 3.0)
 
   // ---------- forward projection: geo → (face, hex2d) → FaceIJK ----------
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -80,9 +80,9 @@ object Graphs {
     * live results; lineage stays intact, so a long-retained result
     * frame consumed after eviction recomputes instead of erroring.
     * Each eviction logs one WARN, since that recompute is silent and
-    * costly.
+    * costly. Pins are per session; releasing it unpersists them.
     */
-  private final class Pins[T](unpersist: T => Unit) {
+  private final class Pins[T](unpersist: T => Unit) extends AutoCloseable {
     private val q = new java.util.ArrayDeque[T]()
     def add(t: T): Unit = q.synchronized {
       q.addLast(t); if (q.size > 8) Some(q.pollFirst()) else None
@@ -92,15 +92,21 @@ object Graphs {
         "that is consumed later recomputes every propagation round.")
       unpersist(old)
     }
+    override def close(): Unit =
+      Iterator.continually(q.synchronized(q.pollFirst()))
+        .takeWhile(_ != null).foreach(unpersist)
   }
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  private val pinnedRdds = new Pins[org.apache.spark.rdd.RDD[_]](_.unpersist(false))
-  private def registerResult(r: org.apache.spark.rdd.RDD[_]): Unit = pinnedRdds.add(r)
+  private def registerResult(spark: SparkSession,
+      r: org.apache.spark.rdd.RDD[_]): Unit =
+    graft.SessionCache(spark).slot("graphs.pinned_rdds")(
+      new Pins[org.apache.spark.rdd.RDD[_]](_.unpersist(false))).add(r)
   /** Same convention for the generic (non-Long) paths' persisted
     * result frames.
     */
-  private val pinnedFrames = new Pins[DataFrame](_.unpersist(false))
-  private def registerResult(df: DataFrame): Unit = pinnedFrames.add(df)
+  private def registerResult(spark: SparkSession, df: DataFrame): Unit =
+    graft.SessionCache(spark).slot("graphs.pinned_frames")(
+      new Pins[DataFrame](_.unpersist(false))).add(df)
 
   /** Connected components of the undirected graph given by `edges`
     * (two numeric columns `srcCol`, `dstCol`). Returns one row per
@@ -191,7 +197,7 @@ object Graphs {
         f"sec=${(System.nanoTime() - rt0) / 1e9}%.3f")
     }
     sym0.unpersist()
-    registerResult(labels) // bounded: ages out past 8 live results
+    registerResult(spark, labels) // bounded: ages out past 8 live results
     labels.select($"id", $"lbl".as("component"))
   }
 
@@ -252,7 +258,7 @@ object Graphs {
         f"sec=${(System.nanoTime() - rt0) / 1e9}%.3f")
     }
     sym.unpersist()
-    registerResult(labels) // bounded: ages out past 8 live results
+    registerResult(spark, labels) // bounded: ages out past 8 live results
     spark.createDataFrame(
       labels.map { case (id, l) => Row(id, l) },
       StructType(Seq(StructField("id", LongType, nullable = false),
@@ -373,8 +379,8 @@ object Graphs {
     // every contraction round when the caller finally consumes it;
     // both age out of the bounded registry (r20) instead of pinning
     // one pair per call forever.
-    registerResult(nodes)
-    registerResult(curPersisted)
+    registerResult(spark, nodes)
+    registerResult(spark, curPersisted)
     nodes.join(cur.select($"u".as("id"), $"v".as("component")),
         Seq("id"), "left")
       .select($"id", coalesce($"component", $"id").as("component"))
@@ -472,8 +478,8 @@ object Graphs {
     // nodes and the star edges stay persisted for the lazy result;
     // both age out of the bounded registry (r20) instead of pinning
     // one RDD pair per call forever.
-    registerResult(nodes)
-    registerResult(cur)
+    registerResult(spark, nodes)
+    registerResult(spark, cur)
     val labels = nodes.leftOuterJoin(cur, part).map {
       case (id, (_, comp)) => Row(id, comp.getOrElse(id))
     }

@@ -77,12 +77,14 @@ object Vectors {
     (model.transform(feat).drop("__fv"), model.clusterCenters.map(_.toArray))
   }
 
-  /** Key of the most recent [[ivfIndexCached]] build/lookup — the
-    * pipe_ann_ivf dynOracle reads it at dump time to inline the SAME
-    * centroids the gate query just used (Verify runs every query
+  /** Key of the session's most recent [[ivfIndexCached]] build/lookup
+    * — the pipe_ann_ivf dynOracle reads it at dump time to inline the
+    * SAME centroids the gate query just used (Verify runs every query
     * before dumping oracle_sql.json).
     */
-  @volatile private[graft] var lastIvfKey: Option[(String, String, Int, Long)] = None
+  private def lastIvfKey(spark: org.apache.spark.sql.SparkSession) =
+    graft.SessionCache(spark).slot("ivf.last_key")(
+      new java.util.concurrent.atomic.AtomicReference(Option.empty[(String, String, Int, Long)]))
 
   /** [[ivfIndex]] built once per (session, corpus key, column, k,
     * seed) and persisted — index BUILD is amortized across queries,
@@ -92,7 +94,7 @@ object Vectors {
   def ivfIndexCached(emb: DataFrame, key: String, vecCol: String, k: Int, seed: Long)
       : (DataFrame, Array[Array[Double]]) = {
     val full = (key, vecCol, k, seed)
-    lastIvfKey = Some(full)
+    lastIvfKey(emb.sparkSession).set(Some(full))
     graft.SessionCache(emb.sparkSession).getOrBuild("ivf", full) {
       val (a, c) = ivfIndex(emb, vecCol, k, seed)
       (a.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), c)
@@ -188,12 +190,13 @@ object Vectors {
     * degrading that entry only — without a session or on failure).
     */
   private def cachedCentroids(): Option[Seq[Seq[Double]]] = {
-    val key = lastIvfKey.getOrElse(
+    val fallback =
       (sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"),
-        "embedding", 8, 42L))
+        "embedding", 8, 42L)
     org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .flatMap { s =>
+        val key = lastIvfKey(s).get.getOrElse(fallback)
         try Some(ivfIndexCached(graft.Tables(s, key._1, "embeddings"),
           key._1, key._2, key._3, key._4)._2.toSeq.map(_.toSeq))
         catch {

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *
   *  - [[Projections.materialize]] builds the pre-aggregate parquet
   *    (partial sums/mins/maxs/counts per dimension tuple) and registers
-  *    it in a session-global catalog;
+  *    it in the session's catalog (its [[graft.SessionCache]]);
   *  - [[ProjectionRewrite]] is a `Rule[LogicalPlan]` that matches
   *    `Aggregate` nodes over the base relation whose grouping keys are
   *    a subset of the projection dims and whose aggregate calls are
@@ -49,12 +49,13 @@ object Projections {
       measures: Seq[Measure],
       baseMtime: Long)
 
-  private val catalog = TrieMap.empty[String, ProjectionDef]
+  private def catalog(spark: SparkSession): TrieMap[String, ProjectionDef] =
+    graft.SessionCache(spark).slot("projections")(TrieMap.empty[String, ProjectionDef])
 
-  // Sorted: the rewrite takes the FIRST matching projection, and the
-  // catalog is session-global — TrieMap iteration order would make
-  // the chosen projection depend on registration history.
-  def registered: Seq[ProjectionDef] = catalog.values.toSeq.sortBy(_.name)
+  // Sorted: the rewrite takes the FIRST match, and TrieMap order
+  // would make the choice depend on registration history.
+  def registered(spark: SparkSession): Seq[ProjectionDef] =
+    catalog(spark).values.toSeq.sortBy(_.name)
 
   /** Modification time of the base table's root path (file or dir).
     * The rewrite checks this per query: a projection built from an
@@ -72,13 +73,13 @@ object Projections {
   private[plans] def staleAndDrop(spark: SparkSession, d: ProjectionDef): Boolean = {
     val cur = mtimeOf(spark, d.basePath)
     val stale = cur != d.baseMtime
-    if (stale) catalog.remove(d.name)
+    if (stale) catalog(spark).remove(d.name)
     stale
   }
 
   /** Build the pre-aggregate parquet and register the projection.
     * Idempotent per (name, basePath, base mtime): repeat calls in the
-    * same JVM (bench reruns, Verify's sequential queries) skip the
+    * same session (bench reruns, Verify's sequential queries) skip the
     * rebuild — like ClickHouse, the projection is maintained by the
     * table, not rebuilt per query. If the base was rewritten since,
     * the projection IS rebuilt.
@@ -86,7 +87,7 @@ object Projections {
   def materialize(spark: SparkSession, name: String, basePath: String,
       projPath: String, dims: Seq[String], measures: Seq[Measure]): Unit = {
     val mtime = mtimeOf(spark, basePath)
-    if (catalog.get(name).exists(d => d.basePath == basePath &&
+    if (catalog(spark).get(name).exists(d => d.basePath == basePath &&
       d.projPath == projPath && d.baseMtime == mtime))
       return
     val base = spark.read.parquet(basePath)
@@ -108,7 +109,7 @@ object Projections {
     }
     base.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(projPath)
-    catalog.put(name,
+    catalog(spark).put(name,
       ProjectionDef(name, basePath, projPath, dims, measures, mtime))
   }
 
@@ -130,7 +131,7 @@ case class ProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     case agg: Aggregate if agg.groupingExpressions.nonEmpty =>
       // (grouping required: a global agg over an EMPTY base would read
       // zero projection rows and turn count()=0 into sum(cnt)=NULL)
-      registered.view.flatMap(d => tryRewrite(agg, d)).headOption.getOrElse(agg)
+      registered(spark).view.flatMap(d => tryRewrite(agg, d)).headOption.getOrElse(agg)
   }
 
   /** `path` as a relation's root path prints it: qualified, no scheme. */

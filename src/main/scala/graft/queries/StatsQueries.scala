@@ -307,6 +307,9 @@ object StatsQueries {
       import s.implicits._
       val li = Tables(s, dir, "lineitem")
         .select($"l_returnflag".as("g"), $"l_quantity".as("x"), $"l_discount".as("y"))
+        // NOT NULL in TPC-H; without it the joins infer isnotnull on the
+        // top-level `joint` only and lineitem is scanned twice
+        .filter($"g".isNotNull && $"x".isNotNull && $"y".isNotNull)
       val D0 = "decimal(38,0)"
       val joint = li.groupBy($"g", $"x", $"y").agg(count(lit(1)).as("n"))
       // ONE full-table aggregation pass (r20): the per-value marginal

@@ -528,6 +528,25 @@ class ChCompatSpec extends AnyFunSuite {
     sql("DROP TABLE compat_t")
   }
 
+  test("DDL table names are case-insensitive: CREATE Foo, SHOW and DROP foo") {
+    val ddl = "CREATE TABLE Foo ENGINE = MergeTree ORDER BY tuple() AS SELECT 1 AS x"
+    run(ddl)
+    assert(run("SHOW CREATE TABLE foo").head.getString(0) == ddl)
+    run("DROP TABLE foo")
+    assert(!spark.catalog.tableExists("Foo"))
+  }
+
+  test("DDL: a failed CREATE leaves no DEFAULT for a later table of that name") {
+    intercept[IllegalArgumentException] {
+      run("CREATE TABLE compat_stale (a Int32, b Int32 DEFAULT 7) ENGINE = Nope")
+    }
+    run("CREATE TABLE compat_stale (a Int32, b Int32) ENGINE = MergeTree ORDER BY tuple()")
+    run("INSERT INTO compat_stale (a) VALUES (5)")
+    val r = run("SELECT a, b FROM compat_stale").head
+    assert(r.getInt(0) == 5 && r.isNullAt(1))
+    run("DROP TABLE compat_stale")
+  }
+
   test("wave-3 function breadth: JSON / URL / array picks / bits") {
     val j = run("""SELECT JSONExtractBool('{"t": true}', 't') AS b,
       JSONLength('[1,2,3]') AS la, JSONLength('{"a":1,"b":2}') AS lo,

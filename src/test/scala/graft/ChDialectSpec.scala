@@ -649,7 +649,7 @@ class ChDialectSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Graft.sql(spark, "SELECT * FROM fin_t FINAL")
     }
-    ChSql.registerFinal("fin_t", df =>
+    ChSql.registerFinal(spark, "fin_t", df =>
       graft.ops.Relational.replacingLatest(df, Seq("k"), Seq(col("ver"))))
     val rows = Graft.sql(spark,
       "SELECT k, v FROM fin_t FINAL ORDER BY k")
