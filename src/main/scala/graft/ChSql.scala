@@ -3756,9 +3756,9 @@ object ChSql {
     """(?is)^\s*OPTIMIZE\s+TABLE\s+([A-Za-z_]\w*)(\s+FINAL)?(\s+DEDUPLICATE)?\s*$""".r
 
   /** `CREATE FUNCTION f AS (a, b) -> body` / `AS x -> body` — the CH
-    * SQL-lambda UDF, registered as a parse-once macro
-    * ([[graft.functions.ChDialect.createFunction]]): call sites expand
-    * to builtin expression trees, fully codegen'd.
+    * SQL-lambda UDF, registered as a macro whose body is parsed at
+    * CREATE ([[graft.functions.ChDialect.createFunction]]): call sites
+    * expand to builtin expression trees, fully codegen'd.
     */
   private val createFnRe =
     """(?is)^\s*CREATE\s+FUNCTION\s+([A-Za-z_]\w*)\s+AS\s+(?:\(([^)]*)\)|([A-Za-z_]\w*))\s*->\s*(.+)$""".r

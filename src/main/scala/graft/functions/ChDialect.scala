@@ -202,32 +202,51 @@ object ChDialect {
 
   /** CH `CREATE FUNCTION name AS (args) -> body` [public docs:
     * sql-reference/statements/create/function]: registered as a SQL
-    * MACRO — the body is parsed ONCE and each call site substitutes
-    * its argument trees for the parameter placeholders, so the
-    * expansion stays builtin (codegen'd) expressions end to end; no
-    * UDF, no interpretation. Non-parameter identifiers resolve as
-    * columns at the call site, like any SQL expression.
+    * MACRO — each call site substitutes its argument trees for the
+    * parameter placeholders of the parsed body, so the expansion stays
+    * builtin (codegen'd) expressions end to end; no UDF, no
+    * interpretation. Non-parameter identifiers resolve as columns at
+    * the call site, like any SQL expression. The body is parsed HERE,
+    * so a malformed one fails at CREATE, as in ClickHouse.
     */
   def createFunction(spark: SparkSession, name: String, argNames: Seq[String],
-      body: String): Unit = createMacro(spark, name, Seq(argNames -> body))
+      body: String): Unit = createMacro(spark, name, Seq(argNames -> body), eager = true)
+
+  /** A session's dialect macros: the parameter counts of each built-in
+    * and the number of bodies parsed so far (specs read both).
+    */
+  private[graft] final class Macros {
+    val arities = new java.util.concurrent.ConcurrentHashMap[String, Seq[Int]]()
+    val parsed = new java.util.concurrent.atomic.AtomicLong()
+  }
+  private[graft] def macros(spark: SparkSession): Macros =
+    graft.SessionCache(spark).slot("chdialect.macros")(new Macros)
 
   /** Registers `name` as a macro with one (parameters, body) template
     * per arity: a call picks the template of its argument count and
-    * substitutes its argument trees for the parameters.
+    * substitutes its argument trees for the parameters. A built-in's
+    * template is parsed on the first call of its arity and reused
+    * after, so registering the dialect parses no body; `eager` parses
+    * them all now. The parser is the session's, which reads its confs.
     */
   private def createMacro(spark: SparkSession, name: String,
-      variants: Seq[(Seq[String], String)]): Unit = {
-    val parsed = variants.map { case (an, b) =>
-      an -> spark.sessionState.sqlParser.parseExpression(b)
+      variants: Seq[(Seq[String], String)], eager: Boolean = false): Unit = {
+    val parser = spark.sessionState.sqlParser
+    val m = macros(spark)
+    val templates = variants.map { case (an, b) =>
+      lazy val t = { val e = parser.parseExpression(b); m.parsed.incrementAndGet(); e }
+      an -> (() => t)
     }
+    if (eager) templates.foreach(_._2())
+    else m.arities.put(name, variants.map(_._1.size))
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, { c =>
-      val (an, template) = parsed.find(_._1.size == c.size).getOrElse(
+      val (an, template) = templates.find(_._1.size == c.size).getOrElse(
         throw new IllegalArgumentException(s"$name expects " +
-          s"${parsed.map(_._1.size).mkString("/")} argument(s), got ${c.size}"))
+          s"${variants.map(_._1.size).mkString("/")} argument(s), got ${c.size}"))
       // inside lambda bodies the parser wraps EVERY identifier as
       // UnresolvedNamedLambdaVariable (it can't know which are
       // lambda parameters yet) — match both node shapes
-      template.transformUp {
+      template().transformUp {
         case ua: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
             if an.contains(ua.name) => c(an.indexOf(ua.name))
         case lv: UnresolvedNamedLambdaVariable
@@ -1053,11 +1072,12 @@ object ChDialect {
       Cast(UnBase64(c.head), org.apache.spark.sql.types.StringType))
 
     // Higher-order array spellings, defined as SQL MACROS: the body is
-    // parsed once and the placeholder attribute is substituted with
-    // the call's argument tree — everything stays builtin higher-order
-    // functions (codegen'd), no UDFs. `element_at(a,1)*0` is the
-    // type-preserving zero (0 for int arrays, 0.0 for doubles), and
-    // the empty-array guard avoids sequence(1,0)'s DESCENDING range.
+    // parsed on the first call (see createMacro) and the placeholder
+    // attribute is substituted with the call's argument tree —
+    // everything stays builtin higher-order functions (codegen'd), no
+    // UDFs. `element_at(a,1)*0` is the type-preserving zero (0 for int
+    // arrays, 0.0 for doubles), and the empty-array guard avoids
+    // sequence(1,0)'s DESCENDING range.
     def macroFn(name: String, argNames: Seq[String], body: String): Unit =
       macroFnN(name, argNames -> body)
     macroFn("arrayCumSum", Seq("__a"),

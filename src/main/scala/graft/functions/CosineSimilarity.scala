@@ -82,10 +82,15 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 /** Session-scoped registration so `expr("cosine_sim(a, b)")` works in
   * any session our queries receive (the driver builds its own session,
-  * so registration happens at query-build time, idempotently).
+  * so registration happens at query-build time). Once per session: a
+  * replaced function costs Spark a WARN per name, and no name here is
+  * also a ChDialect name, so the order of the two never matters.
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
+  def register(spark: SparkSession): Unit =
+    graft.SessionCache(spark).once("graft.functions")(registerAll(spark))
+
+  private def registerAll(spark: SparkSession): Unit = {
     val fr = spark.sessionState.functionRegistry
     fr.createOrReplaceTempFunction(
       "cosine_sim", (children: Seq[Expression]) =>

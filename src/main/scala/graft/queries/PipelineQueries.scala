@@ -1908,7 +1908,9 @@ object PipelineQueries {
     // — the MRL serving trick (use a prefix of the trained embedding
     // at 1/D of the cost). Reports the renormalized prefix and how
     // much cosine-vs-full it preserves on a fixed probe vector; one
-    // scan, pure codegen'd array arithmetic.
+    // scan, pure codegen'd array arithmetic. The prefix is rendered
+    // through DECIMAL(12,6), the one fixed-point text both engines
+    // agree on (a double prints as 3.29E-4 in Spark, 0.000329 in DuckDB).
     QDef("pipe_embed_matryoshka", (s, dir) => {
       import s.implicits._
       val k = 8
@@ -1923,7 +1925,8 @@ object PipelineQueries {
                (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"""))
         .select($"vec_id",
           expr("""array_join(transform(pre,
-                    x -> CAST(round(CAST(x AS DOUBLE) / nrm, 6) AS STRING)),
+                    x -> CAST(CAST(round(CAST(x AS DOUBLE) / nrm, 6)
+                                   AS DECIMAL(12, 6)) AS STRING)),
                   '|')""").as("unit_prefix"),
           // energy retained by the prefix: ‖pre‖²/‖full‖²
           round(($"nrm" * $"nrm") / ($"full_nrm" * $"full_nrm"), 6)
@@ -1932,7 +1935,8 @@ object PipelineQueries {
     }, Some("""
       SELECT vec_id,
              array_to_string(list_transform(pre,
-               x -> CAST(round(CAST(x AS DOUBLE) / nrm, 6) AS VARCHAR)),
+               x -> CAST(CAST(round(CAST(x AS DOUBLE) / nrm, 6)
+                              AS DECIMAL(12, 6)) AS VARCHAR)),
                '|') AS unit_prefix,
              round((nrm * nrm) / (full_nrm * full_nrm), 6) AS energy_kept
       FROM (

@@ -493,6 +493,16 @@ class ChDialectSpec extends AnyFunSuite {
     assert(opt.nonEmpty)
   }
 
+  test("CREATE FUNCTION with a malformed body fails at CREATE, not at its first call") {
+    Graft.init(spark, "/root/testdata/sf0.001")
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException] {
+      Graft.sql(spark, "CREATE FUNCTION bad_body AS x -> x +")
+    }
+    // nothing was registered under the name
+    assert(!spark.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("bad_body")))
+  }
+
   test("scalar WITH substitutes; CTE WITH passes through; routed ordinals resolve") {
     Graft.init(spark, "/root/testdata/sf0.001")
     // scalar aliases in both WHERE and SELECT
